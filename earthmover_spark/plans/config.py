@@ -167,14 +167,21 @@ def compile_config(
 _PATH_KEYS = ("file", "template", "colspec_file", "map_file")
 
 
+def resolve_path(path: str, base_dir: str) -> str:
+    """A config path as the engine opens it: a relative path joins
+    ``base_dir``; absolute paths and URLs (``scheme://``) pass as is."""
+    if os.path.isabs(path) or "://" in path:
+        return path
+    return os.path.join(base_dir, path)
+
+
 def _absolutize_paths(cfg: dict, base_dir: str) -> dict:
     """Rewrite a node's relative file paths against its package dir so
     merged nodes keep working from the parent project's base_dir."""
     out = dict(cfg)
     for key in _PATH_KEYS:
-        v = out.get(key)
-        if isinstance(v, str) and not os.path.isabs(v) and "://" not in v:
-            out[key] = os.path.join(base_dir, v)
+        if isinstance(out.get(key), str):
+            out[key] = resolve_path(out[key], base_dir)
     if out.get("operations"):
         out["operations"] = [
             _absolutize_paths(op, base_dir) if isinstance(op, dict) else op
@@ -256,8 +263,7 @@ def _merge_package(
         raise EarthmoverSparkError(
             f"package {pkg_name!r}: needs `local: <dir>` or `git: <url>`"
         )
-    if not os.path.isabs(local):
-        local = os.path.join(project.base_dir, local)
+    local = resolve_path(local, project.base_dir)
     pkg_yaml = local if local.endswith((".yaml", ".yml")) else os.path.join(
         local, "earthmover.yaml"
     )

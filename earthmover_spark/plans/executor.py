@@ -10,22 +10,18 @@ Improvements over the reference noted in SURVEY.md §4:
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 
 from earthmover_spark.destinations import write_destination
 from earthmover_spark.functions.jinja_compute import template_column
 from earthmover_spark.operators import OPERATIONS
-from earthmover_spark.plans.config import ProjectConfig, compile_config
-from earthmover_spark.plans.graph import Graph
+from earthmover_spark.plans.config import ProjectConfig, compile_config, resolve_path
+from earthmover_spark.plans.graph import NODE_REF, Graph, map_refs
 from earthmover_spark.sources import read_source
 from earthmover_spark.util import EarthmoverSparkError
 
 from pyspark.sql import functions as F
-
-#: operation config keys that are engine-level, not operator kwargs
-_META_KEYS = {"operation", "repartition", "sources", "source"}
 
 
 class Executor:
@@ -57,10 +53,10 @@ class Executor:
             file = cfg.get("file")
             if not file:
                 raise EarthmoverSparkError(f"{name}: streaming source needs `file`")
-            if not os.path.isabs(file):
-                file = os.path.join(self.project.base_dir, file)
             fmt = cfg.get("type") or "parquet"
-            return read_stream_source(self.spark, file, format=fmt)
+            return read_stream_source(
+                self.spark, resolve_path(file, self.project.base_dir), format=fmt
+            )
         connection = cfg.get("connection")
         if connection:
             if connection.startswith("ftp://"):
@@ -72,9 +68,10 @@ class Executor:
             if not cfg.get("query"):
                 raise EarthmoverSparkError(f"{name}: SQL source needs `query`")
             return read_sql(self.spark, connection, cfg["query"])
+        for key in ("file", "colspec_file"):
+            if cfg.get(key):
+                cfg[key] = resolve_path(cfg[key], self.project.base_dir)
         file = cfg.pop("file", None)
-        if file and not os.path.isabs(file):
-            file = os.path.join(self.project.base_dir, file)
         kwargs = {
             k: v
             for k, v in cfg.items()
@@ -97,17 +94,14 @@ class Executor:
         the full Spark SQL surface (CTEs, window functions, lateral
         views) composes with YAML operations — Catalyst optimizes across
         the boundary since views are just plans."""
-        def _sub(m: "re.Match[str]") -> str:
+        def _sub(m) -> str:
             ref = m.group(0)
             df = self._resolve(ref)
             view = ref.replace("$", "em_").replace(".", "__")
             df.createOrReplaceTempView(view)
             return view
 
-        rewritten = re.sub(
-            r"\$(?:sources|transformations)\.\w+", _sub, query
-        )
-        return self.spark.sql(rewritten)
+        return self.spark.sql(NODE_REF.sub(_sub, query))
 
     def _eval_transformation(self, name: str, cfg: dict) -> DataFrame:
         df = self._resolve(cfg["source"]) if cfg.get("source") else None
@@ -123,68 +117,15 @@ class Executor:
             if fn is None:
                 raise EarthmoverSparkError(f"{name}: unknown operation {op_name!r}")
             repartition = op_cfg.pop("repartition", None)
-            for path_key in ("map_file", "colspec_file"):
-                if op_cfg.get(path_key) and not os.path.isabs(op_cfg[path_key]):
-                    op_cfg[path_key] = os.path.join(
-                        self.project.base_dir, op_cfg[path_key]
-                    )
-            kwargs = {k: v for k, v in op_cfg.items() if k not in ("sources",)}
-            if op_name in ("join", "union", "intersect_rows", "except_rows"):
-                srcs = [self._resolve(s) for s in op_cfg["sources"]]
-                if df is None and srcs:
-                    # source-less transformation (valid when the first op
-                    # carries op-level `sources`): the first source is the
-                    # left frame, like the reference's multi-source fold.
-                    df, srcs = srcs[0], srcs[1:]
-                kwargs["sources"] = srcs
-            if op_name == "semi_join":
-                kwargs["source"] = self._resolve(op_cfg["source"])
-            if op_name in (
-                "asof_join", "interval_join", "join_stream", "lsh_join"
-            ):
-                kwargs["right"] = self._resolve(op_cfg["right"])
-            if op_name == "enrich_stream":
-                kwargs["static_df"] = self._resolve(op_cfg["static_df"])
-            if op_name in ("resolve_duplicates", "resolve_duplicates_by_score"):
-                kwargs["pairs"] = self._resolve(op_cfg["pairs"])
-            if op_name in ("decontaminate", "decontaminate_near"):
-                kwargs["benchmark"] = self._resolve(op_cfg["benchmark"])
-            if op_name == "decontaminate_bloom":
-                for side in ("benchmark", "sketch"):
-                    if op_cfg.get(side):
-                        kwargs[side] = self._resolve(op_cfg[side])
-            if op_name in ("quality_classifier", "score_with_model"):
-                kwargs["weights"] = self._resolve(op_cfg["weights"])
-            if op_name == "merge_upsert":
-                kwargs["updates"] = self._resolve(op_cfg["updates"])
-            if op_name == "novel_docs":
-                kwargs["seen"] = self._resolve(op_cfg["seen"])
-            if op_name in ("snapshot_diff", "profile_compare"):
-                kwargs["new"] = self._resolve(op_cfg["new"])
-            if op_name in ("cm_estimate", "bloom_probe"):
-                kwargs["keys"] = self._resolve(op_cfg["keys"])
-            if op_name in ("lm_divergence", "kmv_jaccard"):
-                kwargs["b"] = self._resolve(op_cfg["b"])
-            if op_name == "dsir_weights":
-                kwargs["target"] = self._resolve(op_cfg["target"])
-            if op_name in (
-                "hard_negatives", "mine_triplets", "mine_triplets_bucketed"
-            ):
-                kwargs["corpus"] = self._resolve(op_cfg["corpus"])
-            if op_name == "unigram_logprob_ref":
-                kwargs["ref"] = self._resolve(op_cfg["ref"])
-            if op_name == "retrieval_metrics":
-                kwargs["qrels"] = self._resolve(op_cfg["qrels"])
-            if op_name == "validate_table" and op_cfg.get("references"):
-                kwargs["references"] = {
-                    k: self._resolve(v)
-                    for k, v in op_cfg["references"].items()
-                }
-            if op_name == "filter_domains":
-                for side in ("blocklist", "allowlist"):
-                    v = op_cfg.get(side)
-                    if isinstance(v, str) and v.startswith("$"):
-                        kwargs[side] = self._resolve(v)
+            for key in ("map_file", "colspec_file"):
+                if op_cfg.get(key):
+                    op_cfg[key] = resolve_path(op_cfg[key], self.project.base_dir)
+            # every node reference among the values becomes its DataFrame
+            kwargs = {k: map_refs(v, self._resolve) for k, v in op_cfg.items()}
+            if df is None and kwargs.get("sources"):
+                # source-less transformation: the first op-level source
+                # is the left frame, like the reference's multi-source fold
+                df, kwargs["sources"] = kwargs["sources"][0], kwargs["sources"][1:]
             if op_name in ("add_columns", "modify_columns"):
                 kwargs.setdefault("macros", self.project.macros)
             if df is None:
@@ -319,9 +260,7 @@ class Executor:
             template_file = cfg.get("template")
             template = None
             if template_file:
-                if not os.path.isabs(template_file):
-                    template_file = os.path.join(self.project.base_dir, template_file)
-                with open(template_file) as fh:
+                with open(resolve_path(template_file, self.project.base_dir)) as fh:
                     template = fh.read()
             df = render_lines(
                 df, template, macros=self.project.macros,
@@ -397,8 +336,8 @@ class Executor:
             )
             return
         template_file = cfg.get("template")
-        if template_file and not os.path.isabs(template_file):
-            template_file = os.path.join(self.project.base_dir, template_file)
+        if template_file:
+            template_file = resolve_path(template_file, self.project.base_dir)
         short = name.split(".", 1)[1]
         path = write_destination(
             df,

@@ -8,50 +8,48 @@ No graph library needed — plain adjacency dicts and Kahn's algorithm.
 from __future__ import annotations
 
 import fnmatch
+import re
+from typing import Any, Callable
 
 from earthmover_spark.plans.config import ProjectConfig
 from earthmover_spark.util import EarthmoverSparkError
 
+#: a node reference. A `sql` query embeds them in its text; everywhere
+#: else a reference is a whole config value (see :func:`map_refs`).
+NODE_REF = re.compile(r"\$(?:sources|transformations)\.\w+")
 
-def upstream_refs(kind: str, cfg: dict) -> list[str]:
-    """$-references a node consumes: its `source`/`sources` plus any
-    operation-level `sources` (join/union)."""
-    refs: list[str] = []
-    if cfg.get("source"):
-        refs.append(cfg["source"])
-    for s in cfg.get("sources") or []:
-        refs.append(s)
+
+def map_refs(value: Any, fn: Callable[[str], Any]) -> Any:
+    """The one rule for node references: a config value is a reference
+    when it is a string that fully matches :data:`NODE_REF`, and so is
+    each item of a list and each value of a dict. Returns ``value`` with
+    every reference replaced by ``fn(ref)``. The graph collects edges
+    with it and the executor swaps in DataFrames with it, so an
+    operator with a side-input DataFrame needs no entry anywhere."""
+
+    def one(v: Any) -> Any:
+        return fn(v) if isinstance(v, str) and NODE_REF.fullmatch(v) else v
+
+    if isinstance(value, list):
+        return [one(v) for v in value]
+    if isinstance(value, dict):
+        return {k: one(v) for k, v in value.items()}
+    return one(value)
+
+
+def upstream_refs(cfg: dict) -> list[str]:
+    """Nodes a node consumes: its own `source` / `sources` (references
+    by position, so a typo there fails in :class:`Graph`), the
+    references in every operation value, and those a `sql` query embeds
+    in its text."""
+    refs: list[str] = [cfg["source"]] if cfg.get("source") else []
+    refs += cfg.get("sources") or []
     for op in cfg.get("operations") or []:
-        for s in op.get("sources") or []:
-            refs.append(s)
-        # single-frame side inputs: semi_join's `source`,
-        # resolve_duplicates' `pairs`, decontaminate's `benchmark`,
-        # asof/interval joins' `right`, quality_classifier's `weights`,
-        # enrich_stream's `static_df`, snapshot_diff's `new`,
-        # cm_estimate/bloom_probe's `keys`, lm_divergence's `b`,
-        # triplet miners' `corpus`, decontaminate_bloom's `sketch`,
-        # retrieval_metrics' `qrels`. A key missing here is not just
-        # an ordering hazard: a node consumed ONLY through it has no
-        # DAG edge, looks dead, and gets pruned before evaluation.
-        for key in ("source", "pairs", "benchmark", "right", "weights",
-                    "static_df", "updates", "seen", "new", "keys", "b",
-                    "target", "ref", "corpus", "sketch", "qrels"):
-            if op.get(key):
-                refs.append(op[key])
-        # validate_table's `references` map; filter_domains' list refs
-        for v in (op.get("references") or {}).values():
-            refs.append(v)
-        for key in ("blocklist", "allowlist"):
-            if isinstance(op.get(key), str):
-                refs.append(op[key])
-        # sql operations embed $node references inside the query text
+        for v in op.values():
+            map_refs(v, refs.append)
         if op.get("operation") == "sql" and isinstance(op.get("query"), str):
-            import re as _re
-
-            refs.extend(
-                _re.findall(r"\$(?:sources|transformations)\.\w+", op["query"])
-            )
-    return [r for r in refs if isinstance(r, str) and r.startswith("$")]
+            refs.extend(NODE_REF.findall(op["query"]))
+    return refs
 
 
 class Graph:
@@ -61,7 +59,7 @@ class Graph:
         self.edges: dict[str, list[str]] = {n: [] for n in self.nodes}  # node -> downstream
         self.parents: dict[str, list[str]] = {n: [] for n in self.nodes}
         for name, node in self.nodes.items():
-            for ref in upstream_refs(node.kind, node.config):
+            for ref in upstream_refs(node.config):
                 if ref not in self.nodes:
                     raise EarthmoverSparkError(
                         f"{name} references unknown node {ref!r}"

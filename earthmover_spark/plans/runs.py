@@ -17,7 +17,7 @@ import json
 import os
 import time
 
-from earthmover_spark.plans.config import ProjectConfig
+from earthmover_spark.plans.config import ProjectConfig, resolve_path
 
 RUNS_FILE = ".earthmover_spark_runs.csv"
 SKIP_EXIT_CODE = 99  # reference __main__ convention
@@ -45,12 +45,7 @@ def _node_files(project: ProjectConfig) -> list[str]:
         for op in cfg.get("operations") or []:
             if op.get("map_file"):
                 files.append(op["map_file"])
-    out = []
-    for f in files:
-        if not os.path.isabs(f):
-            f = os.path.join(project.base_dir, f)
-        out.append(f)
-    return sorted(set(out))
+    return sorted({resolve_path(f, project.base_dir) for f in files})
 
 
 def compute_hashes(
@@ -89,10 +84,7 @@ class RunsFile:
         # docs/configuration.md:65, default ~/.earthmover.csv) > project-dir
         state_file = project.config.get("state_file")
         if path is None and state_file:
-            state_file = os.path.expanduser(state_file)
-            if not os.path.isabs(state_file):
-                state_file = os.path.join(project.base_dir, state_file)
-            path = state_file
+            path = resolve_path(os.path.expanduser(state_file), project.base_dir)
         self.path = path or os.path.join(project.base_dir, RUNS_FILE)
 
     def rows(self) -> list[dict]:

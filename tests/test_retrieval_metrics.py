@@ -228,42 +228,3 @@ def test_retrieval_metrics_yaml_e2e(spark, tmp_path):
     want = 7.0 / (7.0 + 1.0 / math.log2(3.0))
     assert float(rows["q1"]["ndcg"]) == pytest.approx(want, rel=1e-9)
     assert float(rows["q2"]["mrr"]) == pytest.approx(0.5)
-
-
-def test_upstream_refs_cover_all_side_frame_keys():
-    """Regression for the dead-node prune: every op-level side-frame
-    key the executor resolves must also be a DAG dependency key —
-    otherwise a source consumed ONLY through it is pruned before
-    evaluation (found via retrieval_metrics' qrels; corpus/sketch had
-    the same latent gap)."""
-    import re
-
-    from earthmover_spark.plans import graph as g
-
-    src = open(g.__file__.replace(".pyc", ".py")).read()
-    executor_src = open(
-        g.__file__.replace("graph.py", "executor.py")
-    ).read()
-    resolved = {
-        k
-        for _, k in re.findall(
-            r'kwargs\["(\w+)"\] = self\._resolve\(op_cfg\["(\w+)"\]',
-            executor_src,
-        )
-    }
-    # loop-resolved keys (kwargs[side] = ...) carry no quoted literal
-    # at the assignment; harvest the loop's tuple instead so e.g.
-    # decontaminate_bloom's benchmark/sketch are actually asserted
-    for tup in re.findall(
-        r"for \w+ in \(([^)]*)\):\s*\n\s*if op_cfg\.get\(\w+\):"
-        r"\s*\n\s*kwargs\[\w+\] = self\._resolve",
-        executor_src,
-    ):
-        resolved |= set(re.findall(r'"(\w+)"', tup))
-    assert {"benchmark", "sketch", "qrels"} <= resolved  # regex sanity
-    refs = g.upstream_refs(
-        "transformation",
-        {"operations": [{k: f"$sources.{k}" for k in resolved}]},
-    )
-    missing = resolved - {r.split(".")[1] for r in refs}
-    assert not missing, f"side-frame keys invisible to the DAG: {missing}"
