@@ -393,7 +393,7 @@ def q_jinja_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_jinja_if_and(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r12 compound-condition lowering: and/or/not chains and list
     membership inside {% if %} compile to native boolean Columns
-    (jinja_compute._lower_condition) — the plan lint proves no Python
+    (jinja_compute._ast_condition) — the plan lint proves no Python
     UDF ran, and this oracle proves branch parity with SQL CASE."""
     li = _p(spark, sf_dir, "lineitem")
     out = C.add_columns(

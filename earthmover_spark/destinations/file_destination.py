@@ -218,9 +218,10 @@ def write_destination(
         prefix=f"em_dest_{name.replace(os.sep, '_')}_", dir=output_dir
     )
     parts_dir = os.path.join(tmp_dir, "parts")
+    tmp_out = os.path.join(tmp_dir, "out")
     try:
         lines.write.mode("overwrite").text(parts_dir)
-        with open(out_path, "wb") as fh:
+        with open(tmp_out, "wb") as fh:
             if header is not None:
                 fh.write((_render_once(header) + "\n").encode("utf-8"))
             for part in sorted(glob.glob(os.path.join(parts_dir, "part-*"))):
@@ -228,6 +229,9 @@ def write_destination(
                     shutil.copyfileobj(pf, fh, 1 << 20)
             if footer is not None:
                 fh.write((_render_once(footer) + "\n").encode("utf-8"))
+        # the file appears whole or not at all: a failed write leaves
+        # any previous output in place, never a truncated file
+        os.replace(tmp_out, out_path)
     finally:
         shutil.rmtree(tmp_dir, ignore_errors=True)
     return out_path

@@ -2,28 +2,32 @@
 
 The reference's scalar-function surface is Jinja2 rendered per row
 (reference: earthmover/util.py:73-99, applied at
-earthmover/operations/column.py:53-59,115-121). Here every template goes
-through a two-stage compiler:
+earthmover/operations/column.py:53-59,115-121). Every template is
+parsed once, by ``jinja2``'s own parser, and then becomes one of two
+things:
 
-1. **Peephole lowering** (`lower_template`): ``{{col}}`` placeholders
-   with the native filter set, slices, full-precedence arithmetic,
-   dotted nested-struct access, ``~`` concatenation, float renders
-   with exact CPython-repr text (functions/pyfloat.py), and
-   ``{% if %}``/``{% elif %}``/``{% else %}`` blocks whose conditions
-   span and/or/not chains, ``[not] in`` membership, ``is`` tests, and
-   truthiness — all compiled to native Column expressions that stay
-   inside whole-stage codegen. This is the perf-critical path at
-   100 TB: a lowered template never leaves the JVM. Fidelity rule:
-   anything whose Spark semantics could diverge from Jinja's (string
-   '+', float division by a runtime value, trim markers, mixed-type
+1. **A native Column** (`lower_template`): the parse tree is lowered
+   node by node — text, ``{{ }}`` outputs with the native filter set,
+   string slices, ``+ - * /`` arithmetic, dotted nested-struct access,
+   ``~`` concatenation, inline ``a if c else b``, float renders with
+   exact CPython-repr text (functions/pyfloat.py), ``{% if %}`` chains
+   whose tests span and/or/not, ``[not] in`` membership, ``is`` tests
+   and truthiness, plus ``{% for %}`` over a static domain and constant
+   ``{% set %}`` (unrolled at compile time). The result stays inside
+   whole-stage codegen: a lowered template never leaves the JVM.
+   Whitespace control, comments and Jinja's dropped trailing newline
+   come from the lexer, so they match the full engine by construction.
+   Fidelity rule: any node whose Spark semantics could diverge from
+   Jinja's (string '+', division by a runtime value, mixed-type
    ordering, macros that could shadow a name, ...) DECLINES lowering
    rather than approximating.
 
-2. **Arrow pandas_udf fallback** (`jinja_udf_column`): the full Jinja2
-   engine (filters, loops, conditionals, macros, ``__row_data__``,
-   ``md5``/``fromjson`` globals — reference earthmover/util.py:126-135)
-   runs over Arrow record batches. The template is compiled once per
-   executor (process-level cache), rendered per row within the batch.
+2. **The Arrow pandas_udf** (`jinja_udf_column`), when lowering
+   declines: the full Jinja2 engine (filters, loops, conditionals,
+   macros, ``__row_data__``, ``md5``/``fromjson`` globals — reference
+   earthmover/util.py:126-135) runs over Arrow record batches. The
+   template is compiled once per executor (process-level cache),
+   rendered per row within the batch.
 
 Rendered results are StringType — the reference's all-string data model
 (docs/design.md:44) makes every Jinja-derived column a string.
@@ -42,11 +46,8 @@ from earthmover_spark.functions.pyfloat import py_float_repr
 from earthmover_spark.util import string_view
 
 # ---------------------------------------------------------------------------
-# Peephole lowering
+# Native lowering: kinds, filters and the shared kind-checked cores
 # ---------------------------------------------------------------------------
-
-_IDENT = r"[A-Za-z_][A-Za-z0-9_]*"
-_BLOCK_RE = re.compile(r"\{%|\{#")
 
 # filters lowerable to native expressions; each maps a Column ->
 # (Column, result kind). Kinds: 'str' | 'int' | 'float'. Float results
@@ -112,62 +113,9 @@ def _render_view(col: Column, kind: str) -> Column:
         return F.coalesce(py_float_repr(col), F.lit(""))
     return string_view(col)
 
-_SLICE_RE = re.compile(rf"^({_IDENT})\[(-?\d*):(-?\d*)\]$")
-_INDEX_RE = re.compile(rf"^({_IDENT})\[(-?\d+)\]$")
-_NUM_RE = re.compile(r"^-?\d+(\.\d+)?$")
-_STR_LIT_RE = re.compile(r"""^'([^'\\]*)'$|^"([^"\\]*)"$""")
-_DOTTED_RE = re.compile(rf"^({_IDENT})((?:\.{_IDENT})+)$")
-
 
 class _NotLowerable(Exception):
     pass
-
-
-def _lower_term(
-    term: str,
-    columns: list[str],
-    value_col: str | None,
-    schema=None,
-):
-    """Lower one filter-free term -> (Column, kind). Raises _NotLowerable."""
-    term = term.strip()
-    if _NUM_RE.match(term):
-        if "." in term:
-            return F.lit(float(term)), "float"
-        return F.lit(int(term)), "int"
-    m = _STR_LIT_RE.match(term)
-    if m:
-        return F.lit(m.group(1) if m.group(1) is not None else m.group(2)), "str"
-    m = _SLICE_RE.match(term)
-    if m:
-        col, kind = _resolve_name(m.group(1), columns, value_col, schema)
-        if kind != "str":
-            # Jinja [a:b] on a non-string is list slicing / an error,
-            # not substring
-            raise _NotLowerable(term)
-        start = int(m.group(2)) if m.group(2) else 0
-        stop = m.group(3)
-        s = col.cast("string")
-        if start >= 0:
-            if stop == "":
-                return F.substring(s, start + 1, 2**31 - 1), "str"
-            stop_i = int(stop)
-            if stop_i >= start:
-                return F.substring(s, start + 1, stop_i - start), "str"
-        raise _NotLowerable(term)
-    m = _INDEX_RE.match(term)
-    if m:
-        col, kind = _resolve_name(m.group(1), columns, value_col, schema)
-        if kind != "str":
-            # Jinja [i] on a non-string is element access, not a char
-            raise _NotLowerable(term)
-        idx = int(m.group(2))
-        if idx >= 0:
-            return F.substring(col.cast("string"), idx + 1, 1), "str"
-        raise _NotLowerable(term)
-    if re.match(rf"^{_IDENT}$", term) or _DOTTED_RE.match(term):
-        return _resolve_name(term, columns, value_col, schema)
-    raise _NotLowerable(term)
 
 
 #: Spark leaf types with a lowering-safe Jinja render/arithmetic story.
@@ -248,8 +196,7 @@ def _resolve_name(
         return F.col(value_col), _flat_kind(value_col, schema)
     if name in columns:
         return F.col(name), _flat_kind(name, schema)
-    m = _DOTTED_RE.match(name)
-    if m and schema is not None:
+    if "." in name and schema is not None:
         parts = name.split(".")
         if parts[0] not in columns:
             raise _NotLowerable(name)
@@ -270,228 +217,16 @@ def _resolve_name(
     raise _NotLowerable(name)
 
 
-_INLINE_IF_RE = re.compile(r"^(.+?)\s+if\s+(.+?)\s+else\s+(.+)$")
-
-
-def _split_ops(expr: str, opchars: str) -> list[str]:
-    """Split ``expr`` on top-level operators from ``opchars`` (outside
-    quotes, parens, AND brackets), returning the alternating list
-    ``[operand, op, operand, ...]``. A '-' is a SIGN, not an operator,
-    when the last non-space character before it is nothing or another
-    operator/open-paren (``3 * -2``, ``-2 + x``)."""
-    out: list[str] = []
-    depth, quote, cur = 0, None, []
-    prev = ""  # last non-space char seen at any depth
-    for ch in expr:
-        if quote:
-            cur.append(ch)
-            if ch == quote:
-                quote = None
-        elif ch in "'\"":
-            quote = ch
-            cur.append(ch)
-        elif ch in "([":
-            depth += 1
-            cur.append(ch)
-        elif ch in ")]":
-            depth -= 1
-            cur.append(ch)
-        elif ch in opchars and depth == 0:
-            # '-' after an operator/open-paren is a sign; a minus at
-            # the very START of the expression is NOT treated as one —
-            # Jinja gives a leading unary minus surprising precedence
-            # (lower than '+'), so such expressions must fall back
-            if ch == "-" and prev != "" and prev in "+-*/%(~|,":
-                cur.append(ch)  # sign
-            else:
-                out.append("".join(cur))
-                out.append(ch)
-                cur = []
-        else:
-            cur.append(ch)
-        if not ch.isspace():
-            prev = ch
-    out.append("".join(cur))
-    return out
-
-
 def _numeric_pair(lk: str, rk: str, expr: str) -> str:
     if lk not in ("int", "float") or rk not in ("int", "float"):
         # Jinja/Python '+' on strings concatenates, 'x' * 3 repeats —
-        # semantics the peephole does not model
+        # semantics the lowering does not model
         raise _NotLowerable(expr)
     return "int" if (lk, rk) == ("int", "int") else "float"
 
 
-def _parens_enclose(s: str) -> bool:
-    """True when s starts with '(' and that paren closes only at the
-    very last character (quote-aware), so stripping the pair is safe."""
-    if not (s.startswith("(") and s.endswith(")")):
-        return False
-    depth, quote = 0, None
-    for i, ch in enumerate(s):
-        if quote:
-            if ch == quote:
-                quote = None
-            continue
-        if ch in "'\"":
-            quote = ch
-        elif ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-            if depth == 0 and i < len(s) - 1:
-                return False
-    return depth == 0
-
-
-def _lower_arith_atom(expr, columns, value_col, schema):
-    expr = expr.strip()
-    if _parens_enclose(expr):
-        return _lower_expr(expr[1:-1], columns, value_col, schema)
-    return _lower_filter_chain(expr, columns, value_col, schema)
-
-
-def _lower_product(expr, columns, value_col, schema):
-    parts = _split_ops(expr, "*/")
-    if len(parts) == 1:
-        return _lower_arith_atom(expr, columns, value_col, schema)
-    left, lk = _lower_arith_atom(parts[0], columns, value_col, schema)
-    for op, rhs in zip(parts[1::2], parts[2::2]):
-        if not rhs.strip():
-            raise _NotLowerable(expr)  # '//' floor-div etc.
-        right, rk = _lower_arith_atom(rhs, columns, value_col, schema)
-        kind = _numeric_pair(lk, rk, expr)
-        if op == "*":
-            left, lk = left * right, kind
-        else:
-            # Python '/' is TRUE division (always float) and raises on
-            # zero where Spark yields NULL — only a provably nonzero
-            # numeric literal divisor keeps the semantics identical
-            lit = rhs.strip()
-            if not _NUM_RE.match(lit) or float(lit) == 0:
-                raise _NotLowerable(expr)
-            left, lk = left / right, "float"
-    return left, lk
-
-
-def _lower_sum(expr, columns, value_col, schema):
-    parts = _split_ops(expr, "+-")
-    if len(parts) == 1:
-        return _lower_product(expr, columns, value_col, schema)
-    left, lk = _lower_product(parts[0], columns, value_col, schema)
-    for op, rhs in zip(parts[1::2], parts[2::2]):
-        right, rk = _lower_product(rhs, columns, value_col, schema)
-        kind = _numeric_pair(lk, rk, expr)
-        left, lk = (left + right if op == "+" else left - right), kind
-    return left, lk
-
-
-def _lower_filter_chain(expr, columns, value_col, schema):
-    """term|f1|f2('arg') — the leaf grammar. The base may itself be a
-    parenthesized expression (``((a|int + b|int)/12)|int``)."""
-    parts = [p.strip() for p in _split_top_level(expr, "|")]
-    base, filters = parts[0], parts[1:]
-    if _parens_enclose(base):
-        col, kind = _lower_expr(base[1:-1], columns, value_col, schema)
-    else:
-        col, kind = _lower_term(base, columns, value_col, schema)
-    for f in filters:
-        col, kind = _apply_filter(f, col, kind)
-    return col, kind
-
-
-def _lower_expr(
-    expr: str,
-    columns: list[str],
-    value_col: str | None,
-    schema=None,
-):
-    """Lower one ``{{ ... }}`` body -> (Column, kind)."""
-    expr = expr.strip()
-    # inline conditional:  A if COND else B
-    m = _INLINE_IF_RE.match(expr)
-    if m:
-        try:
-            cond = _lower_condition(m.group(2), columns, value_col, schema)
-            a, ak = _lower_expr(m.group(1), columns, value_col, schema)
-            b, bk = _lower_expr(m.group(3), columns, value_col, schema)
-            if ak == bk:
-                return F.when(cond, a).otherwise(b), ak
-            # mixed kinds render per-branch (Python keeps the branch's
-            # type: '5' vs '5.0'), so the result is a string
-            return (
-                F.when(cond, _render_view(a, ak)).otherwise(
-                    _render_view(b, bk)
-                ),
-                "str",
-            )
-        except _NotLowerable:
-            pass  # fall through (e.g. ' if ' inside a string literal)
-    # arithmetic with Python/Jinja precedence: parens, + - * /, filters
-    # binding tighter than operators (a|int + b|int), division only by
-    # nonzero numeric literals
-    add_parts = _split_ops(expr, "+-")
-    mul_parts = _split_ops(expr, "*/")
-    if len(add_parts) > 1 and len(_split_top_level(expr, "~")) > 1:
-        # Jinja binds '~' TIGHTER than +/- (jinja2 parse_math1 is built
-        # from parse_concat), so 'a ~ 1 - 2' is (a ~ 1) - 2 — a str-int
-        # TypeError at render. Splitting on +/- first would silently
-        # lower it to concat(a, '-1'); decline instead so the full
-        # Jinja engine surfaces the same error the reference would.
-        raise _NotLowerable(expr)
-    if (len(add_parts) > 1 or len(mul_parts) > 1) and not _NUM_RE.match(expr):
-        try:
-            return _lower_sum(expr, columns, value_col, schema)
-        except _NotLowerable:
-            pass  # e.g. '-' inside unquoted literal text -> other paths
-    # string concatenation:  A ~ B ~ C (Jinja's ~ stringifies operands)
-    if "~" in expr:
-        segs = _split_top_level(expr, "~")
-        if len(segs) > 1:
-            lowered = [
-                _lower_expr(seg, columns, value_col, schema) for seg in segs
-            ]
-            return (
-                F.concat(*[_render_view(col, k) for col, k in lowered]),
-                "str",
-            )
-    return _lower_filter_chain(expr, columns, value_col, schema)
-
-
-def _split_top_level(expr: str, sep: str) -> list[str]:
-    """Split on `sep` outside quoted string literals and parentheses."""
-    out, depth, quote, cur = [], 0, None, []
-    for ch in expr:
-        if quote:
-            cur.append(ch)
-            if ch == quote:
-                quote = None
-            continue
-        if ch in "'\"":
-            quote = ch
-            cur.append(ch)
-        elif ch == "(":
-            depth += 1
-            cur.append(ch)
-        elif ch == ")":
-            depth -= 1
-            cur.append(ch)
-        elif ch == sep and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    out.append("".join(cur))
-    return out
-
-
-_FILTER_CALL_RE = re.compile(rf"^({_IDENT})(?:\((.*)\))?$")
-
-
 def _apply_noarg_filter(name: str, col: Column, kind: str):
-    """No-arg native filters, kind-gated; shared by the token-regex
-    and AST paths."""
+    """No-arg native filters, kind-gated."""
     if kind == "strlist":
         if name == "length":
             # Python len(list); NULL ≡ missing ≡ [] -> 0
@@ -524,29 +259,10 @@ def _apply_noarg_filter(name: str, col: Column, kind: str):
     return _NATIVE_FILTERS[name](col)
 
 
-def _apply_filter(f: str, col: Column, kind: str):
-    m = _FILTER_CALL_RE.match(f.strip())
-    if not m:
-        raise _NotLowerable(f)
-    name, argstr = m.group(1), m.group(2)
-    if argstr is None:
-        return _apply_noarg_filter(name, col, kind)
-    args = [a.strip() for a in _split_top_level(argstr, ",")] if argstr.strip() else []
-    lits = []
-    for a in args:
-        lm = _STR_LIT_RE.match(a)
-        if lm:
-            lits.append(lm.group(1) if lm.group(1) is not None else lm.group(2))
-        elif _NUM_RE.match(a):
-            lits.append(float(a) if "." in a else int(a))
-        else:
-            raise _NotLowerable(f)
-    return _apply_filter_args(name, lits, col, kind)
-
 
 def _apply_filter_args(name: str, lits: list, col: Column, kind: str):
-    """Arg-taking native filters, shared by the token-regex and AST
-    paths. ``lits`` are compile-time Python values (str/int/float)."""
+    """Arg-taking native filters. ``lits`` are compile-time Python
+    values (str/int/float)."""
     if kind == "strlist":
         if name == "join" and len(lits) == 1 and isinstance(lits[0], str):
             # Jinja do_join: sep.join(soft_str(item)) — null elements
@@ -588,61 +304,6 @@ def _apply_filter_args(name: str, lits: list, col: Column, kind: str):
     raise _NotLowerable(name)
 
 
-_COND_RE = re.compile(r"^(.+?)\s*(==|!=|>=|<=|>|<)\s*(.+)$")
-_TOKEN_RE = re.compile(
-    r"\{\{(?P<expr>.*?)\}\}"
-    r"|\{%\s*if\s+(?P<cond>.+?)\s*%\}(?P<body>.*?)\{%\s*endif\s*%\}",
-    re.DOTALL,
-)
-_ELIF_RE = re.compile(r"\{%\s*elif\s+(.+?)\s*%\}", re.DOTALL)
-_ELSE_RE = re.compile(r"\{%\s*else\s*%\}")
-
-
-_KW_BOUND = re.compile(r"[A-Za-z0-9_]")
-
-
-def _split_keyword(expr: str, kw: str) -> list[str]:
-    """Split on the bare keyword ``kw`` at top level (outside quoted
-    strings, parens, and brackets), word-boundary aware — the
-    word-token sibling of ``_split_ops``."""
-    out: list[str] = []
-    depth, quote, cur = 0, None, []
-    i, n, k = 0, len(expr), len(kw)
-    while i < n:
-        ch = expr[i]
-        if quote:
-            cur.append(ch)
-            if ch == quote:
-                quote = None
-            i += 1
-        elif ch in "'\"":
-            quote = ch
-            cur.append(ch)
-            i += 1
-        elif ch in "([":
-            depth += 1
-            cur.append(ch)
-            i += 1
-        elif ch in ")]":
-            depth -= 1
-            cur.append(ch)
-            i += 1
-        elif (
-            depth == 0
-            and expr.startswith(kw, i)
-            and (i == 0 or not _KW_BOUND.match(expr[i - 1]))
-            and (i + k == n or not _KW_BOUND.match(expr[i + k]))
-        ):
-            out.append("".join(cur))
-            cur = []
-            i += k
-        else:
-            cur.append(ch)
-            i += 1
-    out.append("".join(cur))
-    return out
-
-
 def _as_bool(col: Column) -> Column:
     """Two-valued view of a possibly-NULL boolean. Python/Jinja logic
     has no UNKNOWN: a NULL comparison already falls to the else
@@ -653,174 +314,29 @@ def _as_bool(col: Column) -> Column:
     return F.coalesce(col, F.lit(False))
 
 
-def _lower_condition(
-    cond: str,
-    columns: list[str],
-    value_col: str | None,
-    schema=None,
-) -> Column:
-    """Lower a ``{% if %}`` / inline-if condition to a NON-NULL
-    boolean Column with Python two-valued semantics.
-
-    Grammar (Jinja precedence: ``or`` < ``and`` < ``not`` <
-    comparison/membership)::
-
-        cond     := and_chain (' or ' and_chain)*
-        and_chain:= not_atom (' and ' not_atom)*
-        not_atom := 'not' not_atom | atom
-        atom     := '(' cond ')'
-                  | X 'is' ['not'] ('none' | 'defined' | 'odd' |
-                  |                 'even' | 'number' | 'string')
-                  | A ['not'] 'in' B      # literal list/tuple, or
-                  |                       # substring when B is str
-                  | A <cmp> B             # kind-checked: str~str or
-                  |                       # numeric~numeric; mixed ==/
-                  |                       # != constant-fold, mixed
-                  |                       # ordering declines (Python
-                  |                       # TypeError -> full Jinja)
-                  | expr                  # truthiness: '' / 0 falsy
-
-    Anything outside this surface raises ``_NotLowerable`` and the
-    template falls back to the full Jinja UDF.
-
-    NULL convention (r13): a NULL cell on a schema-typed frame is the
-    all-string model's MISSING value, so str-kind comparison/
-    membership/truthiness operands coalesce through ``string_view``
-    (NULL ≡ '', exactly how the reference — pandas dicts with '' for
-    missing — behaves); numeric ``==``/``!=`` use ``eqNullSafe``
-    (Python's ``None == 5`` is False, ``None != 5`` True); numeric
-    ``is odd/even`` on NULL raises at runtime like Jinja's TypeError.
-    Known residual divergence: numeric ORDERING on a NULL operand
-    yields False where Python raises TypeError — reachable only on
-    nullable typed numeric columns (``|int``/``|float`` coalesce NULL
-    to 0 first). The Arrow-UDF fallback renders Python ``None``
-    semantics instead ('None' text, ``None != 'a'`` True) — the same
-    documented deviation as ``_resolve_name``'s null-leaf note.
-    """
-    return _lower_cond_or(cond.strip(), columns, value_col, schema)
-
-
-def _lower_cond_or(cond, columns, value_col, schema):
-    parts = _split_keyword(cond, "or")
-    out = _lower_cond_and(parts[0], columns, value_col, schema)
-    for p in parts[1:]:
-        out = out | _lower_cond_and(p, columns, value_col, schema)
-    return out
-
-
-def _lower_cond_and(cond, columns, value_col, schema):
-    parts = _split_keyword(cond, "and")
-    out = _lower_cond_not(parts[0], columns, value_col, schema)
-    for p in parts[1:]:
-        out = out & _lower_cond_not(p, columns, value_col, schema)
-    return out
-
-
-def _lower_cond_not(cond, columns, value_col, schema):
-    s = cond.strip()
-    if not s:
-        raise _NotLowerable(cond)
-    if s.startswith("not") and (len(s) == 3 or not _KW_BOUND.match(s[3])):
-        return ~_lower_cond_not(s[3:], columns, value_col, schema)
-    return _lower_cond_atom(s, columns, value_col, schema)
-
-
-def _lower_cond_atom(cond, columns, value_col, schema):
-    s = cond.strip()
-    if _parens_enclose(s):
-        return _lower_cond_or(s[1:-1], columns, value_col, schema)
-    # --- 'X is [not] none/defined' tests -------------------------------
-    is_parts = _split_keyword(s, "is")
-    if len(is_parts) == 2:
-        lhs = is_parts[0].strip()
-        rhs = re.sub(r"\s+", " ", is_parts[1].strip())
-        neg = rhs.startswith("not ")
-        test = rhs[4:] if neg else rhs
-        if test == "defined" and re.match(rf"^{_IDENT}$", lhs):
-            # defined-ness is static: known column (or 'value' inside
-            # modify_columns) -> True. An unknown name is a constant
-            # False — the one place lowering may touch a name outside
-            # the frame, exactly as Jinja's Undefined would.
-            known = lhs in columns or (lhs == "value" and value_col)
-            return F.lit(bool(known) != neg)
-        if test == "none":
-            col, _ = _lower_expr(lhs, columns, value_col, schema)
-            return col.isNotNull() if neg else col.isNull()
-        if test in ("odd", "even"):
-            col, kind = _lower_expr(lhs, columns, value_col, schema)
-            if kind not in ("int", "float"):
-                # Jinja do_odd is value % 2 == 1 — a str operand
-                # raises TypeError, so keep the full engine
-                raise _NotLowerable(cond)
-            # NULL operand (possible only on schema-typed numeric
-            # frames — |int/|float coalesce to 0): Jinja's do_odd
-            # raises TypeError from None % 2, so surface an error
-            # instead of silently picking a branch (r13 ADVICE fix)
-            checked = F.when(col.isNotNull(), col).otherwise(
-                F.raise_error(F.lit(
-                    "is odd/even on a NULL value (Jinja raises "
-                    "TypeError here)"
-                ))
-            )
-            # pmod, not %: Python's modulo takes the DIVISOR's sign
-            # (-3 % 2 == 1, odd), Spark's % the dividend's (-1)
-            base = F.pmod(checked, F.lit(2)) == (1 if test == "odd" else 0)
-            return ~_as_bool(base) if neg else _as_bool(base)
-        if test in ("number", "string"):
-            # static by kind: the all-string model's '5' is NOT a
-            # number to Jinja; int/float kinds are. 'string' must be
-            # kind == 'str' exactly — an array column (strlist) is
-            # neither a number nor a string
-            _, kind = _lower_expr(lhs, columns, value_col, schema)
-            if test == "number":
-                val = kind in ("int", "float")
-            else:
-                val = kind == "str"
-            return F.lit(val != neg)
-        raise _NotLowerable(cond)
-    if len(is_parts) > 2:
-        raise _NotLowerable(cond)
-    # --- membership: A [not] in B --------------------------------------
-    in_parts = _split_keyword(s, "in")
-    if len(in_parts) == 2:
-        lhs, rhs = in_parts[0].strip(), in_parts[1].strip()
-        neg = False
-        if lhs == "not" or (
-            lhs.endswith("not")
-            and not _KW_BOUND.match(lhs[-4])
-        ):
-            neg = True
-            lhs = lhs[:-3].strip()
-        base = _lower_membership(lhs, rhs, columns, value_col, schema)
-        return ~base if neg else base
-    if len(in_parts) > 2:
-        raise _NotLowerable(cond)
-    # --- comparison ------------------------------------------------------
-    m = _COND_RE.match(s)
-    if m:
-        left, lk = _lower_expr(m.group(1), columns, value_col, schema)
-        right, rk = _lower_expr(m.group(3), columns, value_col, schema)
-        return _compare_columns(left, lk, right, rk, m.group(2), s)
-    # --- truthiness ------------------------------------------------------
-    col, kind = _lower_expr(s, columns, value_col, schema)
-    if kind == "strlist":
-        raise _NotLowerable(s)  # list truthiness: keep the full engine
-    if kind == "str":
-        # string_view: NULL ≡ '' (falsy), the all-string model
-        return _as_bool(string_view(col) != F.lit(""))
-    return _as_bool(col != F.lit(0))
+#: Jinja's comparison operators (``nodes.Operand.op``); they apply to
+#: constants when folding and to Columns in ``_compare_columns``
+_CMP_OPS = {
+    "eq": lambda a, b: a == b,
+    "ne": lambda a, b: a != b,
+    "lt": lambda a, b: a < b,
+    "gt": lambda a, b: a > b,
+    "lteq": lambda a, b: a <= b,
+    "gteq": lambda a, b: a >= b,
+    "in": lambda a, b: a in b,
+    "notin": lambda a, b: a not in b,
+}
 
 
 def _compare_columns(
-    left: Column, lk: str, right: Column, rk: str, op: str, src: str
+    left: Column, lk: str, right: Column, rk: str, op: str
 ) -> Column:
-    """Kind-checked comparison core, shared by the token-regex and AST
-    condition paths (identical NULL conventions — see
-    ``_lower_condition``)."""
+    """Kind-checked comparison core for the ``_CMP_OPS`` orderings and
+    equalities (NULL conventions: see ``_ast_condition``)."""
     if lk == rk == "strlist":
         # array == array: Spark's null-element equality differs
         # from Python's [None] == [None]
-        raise _NotLowerable(src)
+        raise _NotLowerable(op)
     if lk == rk or {lk, rk} <= {"int", "float"}:
         if lk == rk == "str":
             # NULL ≡ '' under the all-string data model (the
@@ -829,36 +345,28 @@ def _compare_columns(
             # took the else branch where `'' != 'a'` is True
             # (r13 ADVICE fix)
             left, right = string_view(left), string_view(right)
-        elif op in ("==", "!="):
+        elif op in ("eq", "ne"):
             # numeric NULLs: Python's None == 5 is False and
             # None != 5 is True — eqNullSafe models both exactly
             # (plain ==/!= would yield NULL -> else-branch both ways)
             eq = left.eqNullSafe(right)
-            return eq if op == "==" else ~eq
-        cmp = {
-            "==": lambda a, b: a == b,
-            "!=": lambda a, b: a != b,
-            ">": lambda a, b: a > b,
-            ">=": lambda a, b: a >= b,
-            "<": lambda a, b: a < b,
-            "<=": lambda a, b: a <= b,
-        }[op](left, right)
-        return _as_bool(cmp)
+            return eq if op == "eq" else ~eq
+        return _as_bool(_CMP_OPS[op](left, right))
     # mixed str vs numeric: Python equality across types is always
     # False (the all-string model's '3' == 3 is False, NOT Spark's
     # coerced numeric equality); ordering raises TypeError in
     # Python, so those templates must keep the full Jinja engine
-    if op == "==":
+    if op == "eq":
         return F.lit(False)
-    if op == "!=":
+    if op == "ne":
         return F.lit(True)
-    raise _NotLowerable(src)
+    raise _NotLowerable(op)
 
 
-def _membership_from_items(left: Column, lk: str, items: list, src: str):
-    """``A in <literal list>`` core shared by both paths: items whose
-    Python type can never equal A's kind drop out (cross-type equality
-    is False); str-kind membership follows the NULL ≡ '' convention."""
+def _membership_from_items(left: Column, lk: str, items: list):
+    """``A in <literal list>`` core: items whose Python type can never
+    equal A's kind drop out (cross-type equality is False); str-kind
+    membership follows the NULL ≡ '' convention."""
     if not items:
         return F.lit(False)  # x in [] -> False
     keep: list = []
@@ -867,12 +375,12 @@ def _membership_from_items(left: Column, lk: str, items: list, src: str):
             if lk == "str":
                 keep.append(it)
         elif isinstance(it, bool):
-            raise _NotLowerable(src)  # True/1 equality not modeled
+            raise _NotLowerable("bool item")  # True/1 equality not modeled
         elif isinstance(it, (int, float)):
             if lk in ("int", "float"):
                 keep.append(float(it))
         else:
-            raise _NotLowerable(src)
+            raise _NotLowerable(f"in-list item {it!r}")
     if not keep:
         return F.lit(False)  # no item can ever equal A's type
     if lk == "str":
@@ -882,77 +390,26 @@ def _membership_from_items(left: Column, lk: str, items: list, src: str):
     return _as_bool(left.cast("double").isin(*keep))
 
 
-_LIST_ITEM_SPLIT = re.compile(r",")
-
-
-def _lower_membership(lhs, rhs, columns, value_col, schema):
-    """``A in B`` -> non-null boolean. B may be a literal list/tuple
-    (string/number items; Python cross-type equality is always False,
-    so items whose kind cannot match A's are dropped) or a str-kind
-    expression (substring containment, Python's ``'x' in 'xyz'``)."""
-    left, lk = _lower_expr(lhs, columns, value_col, schema)
-    rhs = rhs.strip()
-    is_list = rhs.startswith("[") and rhs.endswith("]") and _parens_enclose(
-        "(" + rhs[1:-1] + ")"
-    )
-    is_tuple = False
-    if not is_list and _parens_enclose(rhs):
-        inner = rhs[1:-1]
-        # a tuple literal needs a top-level comma; a single
-        # parenthesized expression is NOT a tuple
-        if len(_split_top_level(inner, ",")) > 1:
-            is_tuple = True
-    if is_list or is_tuple:
-        items: list = []
-        for it in _split_top_level(rhs[1:-1], ","):
-            it = it.strip()
-            if not it:
-                continue  # tolerate a trailing comma
-            sm = _STR_LIT_RE.match(it)
-            if sm:
-                items.append(
-                    sm.group(1) if sm.group(1) is not None else sm.group(2)
-                )
-            elif _NUM_RE.match(it):
-                items.append(float(it))
-            else:
-                raise _NotLowerable(it)  # non-literal item -> full Jinja
-        return _membership_from_items(left, lk, items, rhs)
-    # substring containment — both sides must be str-kind (Python
-    # raises TypeError on 5 in 'xyz')
-    rcol, rkind = _lower_expr(rhs, columns, value_col, schema)
-    if lk != "str" or rkind != "str":
-        raise _NotLowerable(f"{lhs} in {rhs}")
-    # string_view both sides: NULL ≡ '' ('' in 'xyz' is True in Python)
-    return _as_bool(F.contains(string_view(rcol), string_view(left)))
-
-
 # ---------------------------------------------------------------------------
-# {% for %} loop unrolling (Jinja-AST partial evaluation)
+# Lowering jinja2's parse tree (partial evaluation)
 # ---------------------------------------------------------------------------
 #
-# The most common "dump the row" idiom in reference configs is a loop
-# over ``__row_data__`` (reference earthmover/tests/templates/
-# verbatim.jsont:1, rendered per row at earthmover/nodes/
-# destination.py:170). The iteration domain is STATIC — the frame's
+# ``jinja2``'s own parser yields the tree with whitespace control
+# already applied. Each node either folds to a compile-time constant
+# (literals, ``{% set %}`` bindings, loop variables, ``loop.*``) or
+# lowers to a Column through the kind-checked cores above.
+#
+# Loops unroll: the most common "dump the row" idiom in reference
+# configs is a loop over ``__row_data__`` (reference earthmover/tests/
+# templates/verbatim.jsont:1, rendered per row at earthmover/nodes/
+# destination.py:170). Its iteration domain is STATIC — the frame's
 # column list (plus the ``__row_data__`` self-key for destination
-# renders) — so the loop unrolls at compile time: ``jinja2``'s own
-# parser yields an AST with whitespace-control already applied, the
-# loop variable and ``loop.first/last/index/...`` become compile-time
-# constants per iteration, ``{% if %}`` tests over them constant-fold,
-# and the surviving ``{{__row_data__[key]|filter}}`` emits lower
-# through the same filter machinery as flat placeholders. Anything
-# outside that surface (a non-constant test, a dynamic key, an
-# unsupported node type) raises ``_NotLowerable`` and the template
-# keeps the full Jinja engine.
-
-#: templates with {% for %} or {% set %} take the AST unroll path —
-#: the token-regex path cannot express either. {% if %} tests there
-#: constant-fold when they depend only on the unroll env, and compile
-#: via _ast_condition (same cores/NULL conventions as the token path)
-#: when they depend on row data — e.g. the skip-empty-fields dump
-#: `{% if __row_data__[key] != '' %}` (r13b).
-_FOR_TAG_RE = re.compile(r"\{%-?\s*(?:for|set)\b")
+# renders) — so each iteration binds the loop variable as a constant,
+# ``{% if %}`` tests over it constant-fold, and the surviving
+# ``{{__row_data__[key]|filter}}`` emits lower like flat placeholders.
+# Anything outside the supported surface (a dynamic key, a runtime
+# loop domain, an unsupported node type) raises ``_NotLowerable`` and
+# the template keeps the full Jinja engine.
 
 
 class _NotConst(Exception):
@@ -967,18 +424,6 @@ class _ColRef:
 
     def __init__(self, name: str):
         self.name = name
-
-
-_CMP_OPS = {
-    "eq": lambda a, b: a == b,
-    "ne": lambda a, b: a != b,
-    "lt": lambda a, b: a < b,
-    "gt": lambda a, b: a > b,
-    "lteq": lambda a, b: a <= b,
-    "gteq": lambda a, b: a >= b,
-    "in": lambda a, b: a in b,
-    "notin": lambda a, b: a not in b,
-}
 
 
 def _ast_const(node, env):
@@ -1010,7 +455,7 @@ def _ast_const(node, env):
                 st = _ast_const(arg.step, env) if arg.step else None
                 return obj[lo:hi:st]
             return obj[_ast_const(arg, env)]
-        except (TypeError, KeyError, IndexError) as exc:
+        except (TypeError, KeyError, IndexError, ValueError) as exc:
             # Jinja yields Undefined here; decline rather than model it
             raise _NotConst(str(exc)) from exc
     if isinstance(node, nodes.Not):
@@ -1048,8 +493,11 @@ def _ast_const(node, env):
             if op.op not in _CMP_OPS:
                 raise _NotConst(op.op)
             right = _ast_const(op.expr, env)
-            if not _CMP_OPS[op.op](left, right):
-                return False
+            try:
+                if not _CMP_OPS[op.op](left, right):
+                    return False
+            except TypeError as exc:  # 'a' < 1: the engine raises
+                raise _NotConst(str(exc)) from exc
             left = right  # Python comparison chaining: a < b < c
         return True
     raise _NotConst(type(node).__name__)
@@ -1071,16 +519,29 @@ def _const_lit(v):
         return F.lit(v), "str"
     if isinstance(v, bool) or v is None:
         raise _NotLowerable(f"un-lowerable constant {v!r}")
-    if isinstance(v, int):
+    if isinstance(v, int) and -(2**63) <= v < 2**63:
         return F.lit(v), "int"
     if isinstance(v, float):
         return F.lit(v), "float"
     raise _NotLowerable(f"un-lowerable constant {v!r}")
 
 
+#: binary arithmetic that lowers on numeric kinds ('/' is handled
+#: apart: true division with a guarded divisor)
+_ARITH = {
+    "Add": lambda a, b: a + b,
+    "Sub": lambda a, b: a - b,
+    "Mul": lambda a, b: a * b,
+}
+
+
 def _ast_expr_column(node, env, columns, value_col, schema):
-    """Lower an AST expression (under the unroll env) -> (Column, kind)."""
+    """Lower an AST expression (under the compile-time env) ->
+    (Column, kind)."""
     from jinja2 import nodes
+
+    def lower(n):
+        return _ast_expr_column(n, env, columns, value_col, schema)
 
     try:
         return _const_lit(_ast_const(node, env))
@@ -1104,7 +565,7 @@ def _ast_expr_column(node, env, columns, value_col, schema):
             ):
                 raise _NotLowerable(f"__row_data__[{key!r}]")
             return F.col(key), _flat_kind(key, schema)
-        raise _NotLowerable("getitem base")
+        return _ast_substring(node, env, columns, value_col, schema)
     if isinstance(node, nodes.Name):
         ref = env.get(node.name)
         if isinstance(ref, _ColRef):
@@ -1130,9 +591,7 @@ def _ast_expr_column(node, env, columns, value_col, schema):
     if isinstance(node, nodes.Filter):
         if node.kwargs or node.dyn_args or node.dyn_kwargs:
             raise _NotLowerable(node.name)
-        col, kind = _ast_expr_column(
-            node.node, env, columns, value_col, schema
-        )
+        col, kind = lower(node.node)
         if not node.args:
             return _apply_noarg_filter(node.name, col, kind)
         try:
@@ -1141,82 +600,188 @@ def _ast_expr_column(node, env, columns, value_col, schema):
             raise _NotLowerable(node.name) from exc
         return _apply_filter_args(node.name, args, col, kind)
     if isinstance(node, nodes.Concat):
-        lowered = [
-            _ast_expr_column(n, env, columns, value_col, schema)
-            for n in node.nodes
-        ]
+        lowered = [lower(n) for n in node.nodes]
         return F.concat(*[_render_view(c, k) for c, k in lowered]), "str"
-    raise _NotLowerable(type(node).__name__)
+    op = type(node).__name__
+    if op in _ARITH:
+        left, lk = lower(node.left)
+        right, rk = lower(node.right)
+        return _ARITH[op](left, right), _numeric_pair(lk, rk, op)
+    if isinstance(node, nodes.Div):
+        # Python '/' is TRUE division (always float) and raises on
+        # zero where Spark yields NULL — only a nonzero numeric
+        # constant divisor keeps the semantics identical
+        try:
+            divisor = _ast_const(node.right, env)
+        except _NotConst as exc:
+            raise _NotLowerable("runtime divisor") from exc
+        if (
+            isinstance(divisor, bool)
+            or not isinstance(divisor, (int, float))
+            or divisor == 0
+        ):
+            raise _NotLowerable(f"divisor {divisor!r}")
+        left, lk = lower(node.left)
+        _numeric_pair(lk, "float", op)
+        return left / F.lit(divisor), "float"
+    if isinstance(node, nodes.CondExpr):
+        if node.expr2 is None:
+            raise _NotLowerable("inline if without else")
+        cond = _ast_condition(node.test, env, columns, value_col, schema)
+        a, ak = lower(node.expr1)
+        b, bk = lower(node.expr2)
+        if ak == bk:
+            return F.when(cond, a).otherwise(b), ak
+        # mixed kinds render per branch (Python keeps the branch's
+        # type: '5' vs '5.0'), so the result is a string
+        return (
+            F.when(cond, _render_view(a, ak)).otherwise(_render_view(b, bk)),
+            "str",
+        )
+    raise _NotLowerable(op)
 
 
-_AST_CMP_SYMS = {
-    "eq": "==", "ne": "!=", "lt": "<", "gt": ">",
-    "lteq": "<=", "gteq": ">=",
-}
+def _ast_substring(node, env, columns, value_col, schema):
+    """``s[i]`` / ``s[a:b]`` on a str-kind column -> substring. Only
+    constant, non-negative bounds with ``b >= a`` lower (Python's
+    negative-index and step rules are not modeled). On a non-string,
+    Jinja's ``[]`` is list/dict access, not characters."""
+    from jinja2 import nodes
+
+    if not isinstance(node.node, (nodes.Name, nodes.Getattr)):
+        raise _NotLowerable("getitem base")
+    col, kind = _ast_expr_column(node.node, env, columns, value_col, schema)
+    if kind != "str":
+        raise _NotLowerable(f"[] on {kind}")
+
+    def bound(n):
+        try:
+            v = _ast_const(n, env)
+        except _NotConst as exc:
+            raise _NotLowerable("runtime index") from exc
+        if type(v) is not int or v < 0:
+            raise _NotLowerable(f"index {v!r}")
+        return v
+
+    s, arg = col.cast("string"), node.arg
+    if not isinstance(arg, nodes.Slice):
+        return F.substring(s, bound(arg) + 1, 1), "str"
+    if arg.step is not None:
+        raise _NotLowerable("slice step")
+    start = bound(arg.start) if arg.start is not None else 0
+    if arg.stop is None:
+        return F.substring(s, start + 1, 2**31 - 1), "str"
+    stop = bound(arg.stop)
+    if stop < start:
+        raise _NotLowerable("empty slice")
+    return F.substring(s, start + 1, stop - start), "str"
 
 
 def _ast_condition(node, env, columns, value_col, schema) -> Column:
-    """Lower an AST condition (an {% if %} test the unroll env cannot
-    constant-fold) to a NON-NULL boolean Column — the AST sibling of
-    ``_lower_condition``, sharing its comparison/membership cores and
-    NULL conventions."""
+    """Lower an ``{% if %}`` / inline-if test to a NON-NULL boolean
+    Column with Python two-valued semantics.
+
+    Surface (precedence is already Jinja's — ``or`` < ``and`` <
+    ``not`` < comparison/membership — because the tree is Jinja's)::
+
+        test := test 'or' test | test 'and' test | 'not' test
+              | X 'is' ('none' | 'defined' | 'odd' | 'even' |
+              |         'number' | 'string')
+              | A ['not'] 'in' B      # literal list/tuple, or
+              |                       # substring when B is str
+              | A <cmp> B [<cmp> C]   # kind-checked: str~str or
+              |                       # numeric~numeric; mixed ==/
+              |                       # != constant-fold, mixed
+              |                       # ordering declines (Python
+              |                       # TypeError -> full Jinja)
+              | expr                  # truthiness: '' / 0 falsy
+
+    A test over constants only (loop variables, ``loop.*``, literals)
+    folds to a literal. Anything outside this surface raises
+    ``_NotLowerable`` and the template falls back to the full Jinja
+    UDF.
+
+    NULL convention (r13): a NULL cell on a schema-typed frame is the
+    all-string model's MISSING value, so str-kind comparison/
+    membership/truthiness operands coalesce through ``string_view``
+    (NULL ≡ '', exactly how the reference — pandas dicts with '' for
+    missing — behaves); numeric ``==``/``!=`` use ``eqNullSafe``
+    (Python's ``None == 5`` is False, ``None != 5`` True); numeric
+    ``is odd/even`` on NULL raises at runtime like Jinja's TypeError.
+    Known residual divergence: numeric ORDERING on a NULL operand
+    yields False where Python raises TypeError — reachable only on
+    nullable typed numeric columns (``|int``/``|float`` coalesce NULL
+    to 0 first). The Arrow-UDF fallback renders Python ``None``
+    semantics instead ('None' text, ``None != 'a'`` True) — the same
+    documented deviation as ``_resolve_name``'s null-leaf note.
+    """
     from jinja2 import nodes
+
+    def cond(n):
+        return _ast_condition(n, env, columns, value_col, schema)
+
+    def lower(n):
+        return _ast_expr_column(n, env, columns, value_col, schema)
 
     try:
         return F.lit(bool(_ast_const(node, env)))
     except _NotConst:
         pass
     if isinstance(node, nodes.Not):
-        return ~_ast_condition(node.node, env, columns, value_col, schema)
+        return ~cond(node.node)
     if isinstance(node, nodes.And):
-        return _ast_condition(
-            node.left, env, columns, value_col, schema
-        ) & _ast_condition(node.right, env, columns, value_col, schema)
+        return cond(node.left) & cond(node.right)
     if isinstance(node, nodes.Or):
-        return _ast_condition(
-            node.left, env, columns, value_col, schema
-        ) | _ast_condition(node.right, env, columns, value_col, schema)
+        return cond(node.left) | cond(node.right)
     if isinstance(node, nodes.Test):
         if node.args or node.kwargs or node.dyn_args or node.dyn_kwargs:
             raise _NotLowerable(f"is {node.name}(...)")
         if node.name == "none":
-            col, _ = _ast_expr_column(
-                node.node, env, columns, value_col, schema
-            )
+            col, _ = lower(node.node)
             return col.isNull()
         if node.name == "defined":
-            # resolvable -> statically True; a plain unknown Name is
-            # statically undefined -> False; anything else declines
-            try:
-                _ast_expr_column(node.node, env, columns, value_col, schema)
-                return F.lit(True)
-            except _NotLowerable:
-                if (
-                    isinstance(node.node, nodes.Name)
-                    and node.node.name not in env
-                ):
-                    return F.lit(False)
-                raise
+            # defined-ness is static: a known name is True, an unknown
+            # plain name is False — the one place lowering may touch a
+            # name outside the frame, exactly as Jinja's Undefined
+            # would. Any other expression is defined iff it resolves.
+            if isinstance(node.node, nodes.Name):
+                name = node.node.name
+                return F.lit(
+                    name in env
+                    or name in columns
+                    or name == "__row_data__"
+                    or (name == "value" and value_col is not None)
+                )
+            lower(node.node)
+            return F.lit(True)
         if node.name in ("odd", "even"):
-            col, kind = _ast_expr_column(
-                node.node, env, columns, value_col, schema
-            )
+            col, kind = lower(node.node)
             if kind not in ("int", "float"):
+                # Jinja do_odd is value % 2 == 1 — a str operand
+                # raises TypeError, so keep the full engine
                 raise _NotLowerable(f"is {node.name} on {kind}")
+            # NULL operand (possible only on schema-typed numeric
+            # frames — |int/|float coalesce to 0): Jinja's do_odd
+            # raises TypeError from None % 2, so surface an error
+            # instead of silently picking a branch
             checked = F.when(col.isNotNull(), col).otherwise(
                 F.raise_error(F.lit(
                     "is odd/even on a NULL value (Jinja raises "
                     "TypeError here)"
                 ))
             )
+            # pmod, not %: Python's modulo takes the DIVISOR's sign
+            # (-3 % 2 == 1, odd), Spark's % the dividend's (-1)
             return _as_bool(
                 F.pmod(checked, F.lit(2))
                 == (1 if node.name == "odd" else 0)
             )
         if node.name in ("number", "string"):
-            _, kind = _ast_expr_column(
-                node.node, env, columns, value_col, schema
-            )
+            # static by kind: the all-string model's '5' is NOT a
+            # number to Jinja; int/float kinds are. 'string' must be
+            # kind == 'str' exactly — an array column (strlist) is
+            # neither a number nor a string
+            _, kind = lower(node.node)
             if node.name == "number":
                 return F.lit(kind in ("int", "float"))
             return F.lit(kind == "str")
@@ -1232,41 +797,37 @@ def _ast_condition(node, env, columns, value_col, schema) -> Column:
                     lnode, op.expr, env, columns, value_col, schema
                 )
                 c = ~base if op.op == "notin" else base
-            elif op.op in _AST_CMP_SYMS:
-                left, lk = _ast_expr_column(
-                    lnode, env, columns, value_col, schema
-                )
-                right, rk = _ast_expr_column(
-                    op.expr, env, columns, value_col, schema
-                )
-                c = _compare_columns(
-                    left, lk, right, rk, _AST_CMP_SYMS[op.op], op.op
-                )
+            elif op.op in _CMP_OPS:
+                left, lk = lower(lnode)
+                right, rk = lower(op.expr)
+                c = _compare_columns(left, lk, right, rk, op.op)
             else:
                 raise _NotLowerable(op.op)
             out = c if out is None else (out & c)
             lnode = op.expr
         return out
     # truthiness
-    col, kind = _ast_expr_column(node, env, columns, value_col, schema)
+    col, kind = lower(node)
     if kind == "strlist":
         raise _NotLowerable("list truthiness")
     if kind == "str":
+        # string_view: NULL ≡ '' (falsy), the all-string model
         return _as_bool(string_view(col) != F.lit(""))
     return _as_bool(col != F.lit(0))
 
 
 def _ast_membership_node(lnode, rnode, env, columns, value_col, schema):
-    """``A in B`` where B is a compile-time list or a str-kind
-    expression (substring containment) — AST sibling of
-    ``_lower_membership``."""
+    """``A in B`` -> non-null boolean. B may be a compile-time list or
+    tuple (items whose kind cannot match A's drop out — Python
+    cross-type equality is False) or a str-kind expression (substring
+    containment, Python's ``'x' in 'xyz'``)."""
     left, lk = _ast_expr_column(lnode, env, columns, value_col, schema)
     try:
         items = _ast_const(rnode, env)
     except _NotConst:
         items = None
     if isinstance(items, list):
-        return _membership_from_items(left, lk, items, "in <list>")
+        return _membership_from_items(left, lk, items)
     if items is not None:
         if isinstance(items, str):
             # A in 'literal': substring containment against a constant
@@ -1278,7 +839,9 @@ def _ast_membership_node(lnode, rnode, env, columns, value_col, schema):
         raise _NotLowerable(f"in {type(items).__name__}")
     rcol, rkind = _ast_expr_column(rnode, env, columns, value_col, schema)
     if lk != "str" or rkind != "str":
+        # Python raises TypeError on 5 in 'xyz'
         raise _NotLowerable("in: both sides must be str")
+    # string_view both sides: NULL ≡ '' ('' in 'xyz' is True in Python)
     return _as_bool(F.contains(string_view(rcol), string_view(left)))
 
 
@@ -1329,6 +892,19 @@ def _ast_stmts(body, env, columns, value_col, schema, self_row_data, pieces):
     ``pieces``."""
     from jinja2 import nodes
 
+    def stmts(b, env2, out):
+        _ast_stmts(b, env2, columns, value_col, schema, self_row_data, out)
+
+    def branch(b) -> Column:
+        # a runtime-conditional branch gets a COPY of the env: a
+        # {% set %} inside it would have to apply per row, which the
+        # compile-time env cannot express — any env mutation declines
+        env2, sub = dict(env), []
+        stmts(b, env2, sub)
+        if env2 != env:
+            raise _NotLowerable("{% set %} inside a runtime branch")
+        return _assemble_pieces(sub)
+
     for node in body:
         if isinstance(node, nodes.Output):
             for child in node.nodes:
@@ -1338,10 +914,9 @@ def _ast_stmts(body, env, columns, value_col, schema, self_row_data, pieces):
                 try:
                     pieces.append(_jinja_str(_ast_const(child, env)))
                 except _NotConst:
-                    col, kind = _ast_expr_column(
+                    pieces.append(_render_view(*_ast_expr_column(
                         child, env, columns, value_col, schema
-                    )
-                    pieces.append(_render_view(col, kind))
+                    )))
         elif isinstance(node, nodes.If):
             # constant tests (loop var / loop.* / literals) fold away
             # branch-by-branch; ROW-DEPENDENT tests (r13b) compile via
@@ -1368,29 +943,12 @@ def _ast_stmts(body, env, columns, value_col, schema, self_row_data, pieces):
                     tail_body = b
                     break
             if not runtime:
-                _ast_stmts(
-                    tail_body, env, columns, value_col, schema,
-                    self_row_data, pieces,
-                )
+                stmts(tail_body, env, pieces)
             else:
-                whens = [
-                    (
-                        c,
-                        _ast_branch_column(
-                            b, env, columns, value_col, schema,
-                            self_row_data,
-                        ),
-                    )
-                    for c, b in runtime
-                ]
-                else_col = _ast_branch_column(
-                    tail_body, env, columns, value_col, schema,
-                    self_row_data,
-                )
-                out = F.when(whens[0][0], whens[0][1])
-                for c, col in whens[1:]:
-                    out = out.when(c, col)
-                pieces.append(out.otherwise(else_col))
+                out = F.when(runtime[0][0], branch(runtime[0][1]))
+                for c, b in runtime[1:]:
+                    out = out.when(c, branch(b))
+                pieces.append(out.otherwise(branch(tail_body)))
         elif isinstance(node, nodes.Assign):
             # {% set name = <const expr> %} — binds into the current
             # env. Scoping matches Jinja: a set inside a loop body
@@ -1441,58 +999,9 @@ def _ast_stmts(body, env, columns, value_col, schema, self_row_data, pieces):
                     if not isinstance(node.target, nodes.Name):
                         raise _NotLowerable("unsupported for target")
                     env2[node.target.name] = item
-                _ast_stmts(
-                    node.body, env2, columns, value_col, schema,
-                    self_row_data, pieces,
-                )
+                stmts(node.body, env2, pieces)
         else:
             raise _NotLowerable(type(node).__name__)
-
-
-def _ast_branch_column(
-    body, env, columns, value_col, schema, self_row_data
-) -> Column:
-    """Compile a runtime-conditional branch body to ONE string Column.
-    The branch gets a COPY of the env: a ``{% set %}`` inside it would
-    have to apply conditionally per row, which the compile-time env
-    cannot express — any env mutation declines."""
-    env2 = dict(env)
-    sub: list = []
-    _ast_stmts(body, env2, columns, value_col, schema, self_row_data, sub)
-    if env2 != env:
-        raise _NotLowerable("{% set %} inside a runtime-conditional branch")
-    return _assemble_pieces(sub)
-
-
-def _lower_loop_template(
-    template: str,
-    columns: list[str],
-    value_col: str | None,
-    schema,
-    self_row_data: bool,
-) -> Column | None:
-    """Compile a template containing ``{% for %}`` by unrolling static
-    loops (see module section comment). Returns None when any part
-    falls outside the supported surface."""
-    if self_row_data and value_col is not None:
-        # jinja_udf_column would add 'value' to the self-referencing
-        # dict AFTER creation — an iteration-domain shape this unroll
-        # does not model (destinations never pass value_col)
-        return None
-    import jinja2
-
-    try:
-        ast = jinja2.Environment(undefined=jinja2.Undefined).parse(template)
-    except jinja2.TemplateSyntaxError:
-        return None  # let the full engine surface the error
-    pieces: list = []
-    try:
-        _ast_stmts(
-            ast.body, {}, columns, value_col, schema, self_row_data, pieces
-        )
-    except _NotLowerable:
-        return None
-    return _assemble_pieces(pieces)
 
 
 def _assemble_pieces(pieces: list) -> Column:
@@ -1526,90 +1035,30 @@ def lower_template(
 ) -> Column | None:
     """Try to compile a Jinja template to a native StringType Column.
 
-    Lowerable surface: ``{{col}}`` placeholders with the native filter
-    set, slices, parenthesized +,-,*,/ arithmetic (division only by
-    nonzero numeric literals), dotted nested-struct access when
-    ``schema`` proves the leaf type render-safe, and non-nested
-    ``{% if <cond> %}A{% else %}B{% endif %}`` blocks (-> ``F.when``)
-    where ``<cond>`` is any ``and``/``or``/``not`` combination of
-    comparisons, ``[not] in`` membership (literal lists or substring),
-    ``is [not] none/defined`` tests, and truthiness — see
-    ``_lower_condition``. Templates containing ``{% for %}`` take the
-    AST unroll path (``_lower_loop_template``) instead — the
-    ``__row_data__`` dict-dump idiom compiles to a native column-list
-    concat there. Returns None when the template needs the full Jinja
-    engine.
+    The template is parsed by ``jinja2`` (same environment settings as
+    the UDF's ``_compile``) and its tree lowered by ``_ast_stmts``: see
+    the module docstring for the surface, ``_ast_condition`` for tests
+    and the NULL conventions. ``schema`` enables typed columns and
+    dotted nested-struct access. Returns None when the template needs
+    the full Jinja engine — including a syntax error, which the engine
+    then reports.
     """
-    if _FOR_TAG_RE.search(template):
-        # the token-regex path below cannot express loops; the AST
-        # path handles ALL whitespace-control markers via the lexer
-        return _lower_loop_template(
-            template, columns, value_col, schema, self_row_data
-        )
-    # whitespace-control markers: '{{-' / '-}}' trim adjacent literal
-    # whitespace in Jinja (so '{{-2}}' renders '2', NOT '-2'); block
-    # markers ('{%-') already fail the _TOKEN_RE match and fall back.
-    if "{{-" in template or "-}}" in template:
+    import jinja2
+
+    if self_row_data and value_col is not None:
+        # jinja_udf_column would add 'value' to the self-referencing
+        # dict AFTER creation — a __row_data__ shape lowering does not
+        # model (destinations never pass value_col)
         return None
-    pieces: list[Column] = []
-    pos = 0
+    pieces: list = []
     try:
-        for m in _TOKEN_RE.finditer(template):
-            if m.start() > pos:
-                lit = template[pos : m.start()]
-                if _BLOCK_RE.search(lit):
-                    return None  # unmatched/unsupported block syntax
-                pieces.append(F.lit(lit))
-            if m.group("expr") is not None:
-                col, kind = _lower_expr(
-                    m.group("expr"), columns, value_col, schema
-                )
-                pieces.append(_render_view(col, kind))
-            else:
-                # {% if %}...{% elif %}...{% else %}...{% endif %} ->
-                # a chained F.when. Nested blocks: an inner {% if %}'s
-                # endif ends the non-greedy body match early, leaving
-                # stray {% in the tail — caught below, full Jinja.
-                body = m.group("body")
-                parts = _ELSE_RE.split(body)
-                if len(parts) > 2:
-                    return None  # two {% else %} — malformed, let Jinja err
-                main = parts[0]
-                else_part = parts[1] if len(parts) == 2 else ""
-                segs = _ELIF_RE.split(main)
-                conds = [m.group("cond")] + segs[1::2]
-                texts = [segs[0]] + segs[2::2]
-                if any(_BLOCK_RE.search(t) for t in texts + [else_part]):
-                    return None  # nested/unsupported blocks -> full Jinja
-                branches = []
-                for c, t in zip(conds, texts):
-                    cond = _lower_condition(c, columns, value_col, schema)
-                    t_col = lower_template(t, columns, value_col, schema)
-                    if t_col is None:
-                        return None
-                    branches.append((cond, t_col))
-                else_col = lower_template(
-                    else_part, columns, value_col, schema
-                )
-                if else_col is None:
-                    return None
-                out = F.when(branches[0][0], branches[0][1])
-                for cond, t_col in branches[1:]:
-                    out = out.when(cond, t_col)
-                pieces.append(out.otherwise(else_col))
-            pos = m.end()
-        tail = template[pos:]
-        if tail:
-            if _BLOCK_RE.search(tail):
-                return None
-            pieces.append(F.lit(tail))
-    except _NotLowerable:
+        ast = _environment().parse(template)
+        _ast_stmts(
+            ast.body, {}, columns, value_col, schema, self_row_data, pieces
+        )
+    except (jinja2.TemplateSyntaxError, _NotLowerable):
         return None
-    if not pieces:
-        return F.lit("")
-    if len(pieces) == 1:
-        return pieces[0].cast("string")
-    return F.concat(*pieces)
+    return _assemble_pieces(pieces)
 
 
 # ---------------------------------------------------------------------------
@@ -1628,7 +1077,7 @@ _JINJA_COMMENT_RE = re.compile(r"\{#.*?#\}", re.DOTALL)
 
 def macros_allow_lowering(template: str, macros: str) -> bool:
     """True when the project's ``macros:`` block cannot affect this
-    template's render, so the peephole lowering stays sound.
+    template's render, so the native lowering stays sound.
 
     Jinja compiles ``macros + template`` as one source, so macros can
     change a render in exactly two ways: top-level statements/text
@@ -1671,6 +1120,19 @@ def _jinja_globals() -> dict:
     }
 
 
+def _environment(dirs: tuple = ()):
+    """The one Jinja environment configuration: ``lower_template``
+    parses with it and ``_compile`` renders with it, so lexing
+    (whitespace control, the dropped trailing newline) is identical on
+    both paths."""
+    import jinja2
+
+    loader = jinja2.FileSystemLoader(list(dirs)) if dirs else None
+    env = jinja2.Environment(undefined=jinja2.Undefined, loader=loader)
+    env.globals.update(_jinja_globals())
+    return env
+
+
 def _compile(template: str, macros: str, loader_dir=None):
     """``loader_dir`` may be one directory or a search-path list —
     `{% include %}` resolves against the config dir first (reference
@@ -1682,12 +1144,7 @@ def _compile(template: str, macros: str, loader_dir=None):
     key = (template, macros, dirs)
     tmpl = _TEMPLATE_CACHE.get(key)
     if tmpl is None:
-        import jinja2
-
-        loader = jinja2.FileSystemLoader(list(dirs)) if dirs else None
-        env = jinja2.Environment(undefined=jinja2.Undefined, loader=loader)
-        env.globals.update(_jinja_globals())
-        tmpl = env.from_string(macros + template)
+        tmpl = _environment(dirs).from_string(macros + template)
         _TEMPLATE_CACHE[key] = tmpl
     return tmpl
 

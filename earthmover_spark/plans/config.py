@@ -175,6 +175,20 @@ def resolve_path(path: str, base_dir: str) -> str:
     return os.path.join(base_dir, path)
 
 
+def yaml_keys(value):
+    """``value`` with every bare ``on:`` key named again: YAML 1.1
+    reads it as boolean True. join_stream / enrich_stream take an
+    ``on`` parameter, and a True key next to string keys cannot be
+    sorted when the config is hashed."""
+    if isinstance(value, dict):
+        return {
+            ("on" if k is True else k): yaml_keys(v) for k, v in value.items()
+        }
+    if isinstance(value, list):
+        return [yaml_keys(v) for v in value]
+    return value
+
+
 def _absolutize_paths(cfg: dict, base_dir: str) -> dict:
     """Rewrite a node's relative file paths against its package dir so
     merged nodes keep working from the parent project's base_dir."""

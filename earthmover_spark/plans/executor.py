@@ -16,7 +16,12 @@ from pyspark.sql import DataFrame, SparkSession
 from earthmover_spark.destinations import write_destination
 from earthmover_spark.functions.jinja_compute import template_column
 from earthmover_spark.operators import OPERATIONS
-from earthmover_spark.plans.config import ProjectConfig, compile_config, resolve_path
+from earthmover_spark.plans.config import (
+    ProjectConfig,
+    compile_config,
+    resolve_path,
+    yaml_keys,
+)
 from earthmover_spark.plans.graph import NODE_REF, Graph, map_refs
 from earthmover_spark.sources import read_source
 from earthmover_spark.util import EarthmoverSparkError
@@ -106,9 +111,7 @@ class Executor:
     def _eval_transformation(self, name: str, cfg: dict) -> DataFrame:
         df = self._resolve(cfg["source"]) if cfg.get("source") else None
         for op_cfg in cfg["operations"]:
-            # YAML 1.1 reads a bare `on:` key as boolean True — map it
-            # back (join_stream / enrich_stream use an `on` parameter)
-            op_cfg = {("on" if k is True else k): v for k, v in op_cfg.items()}
+            op_cfg = yaml_keys(op_cfg)
             op_name = op_cfg.pop("operation")
             if op_name == "sql":
                 df = self._sql_operation(name, op_cfg["query"])

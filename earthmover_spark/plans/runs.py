@@ -17,7 +17,7 @@ import json
 import os
 import time
 
-from earthmover_spark.plans.config import ProjectConfig, resolve_path
+from earthmover_spark.plans.config import ProjectConfig, resolve_path, yaml_keys
 
 RUNS_FILE = ".earthmover_spark_runs.csv"
 SKIP_EXIT_CODE = 99  # reference __main__ convention
@@ -53,7 +53,10 @@ def compute_hashes(
 ) -> dict[str, str]:
     config_hash = hashlib.md5(
         json.dumps(
-            {n: node.config for n, node in sorted(project.nodes().items())},
+            {
+                n: yaml_keys(node.config)
+                for n, node in sorted(project.nodes().items())
+            },
             sort_keys=True,
             default=str,
         ).encode()

@@ -1,5 +1,5 @@
 """Parity + decline coverage for the r13 ``{% for %}`` AST unroll
-(jinja_compute._lower_loop_template).
+(jinja_compute._ast_stmts).
 
 The ``__row_data__`` dict-dump loop (reference
 earthmover/tests/templates/verbatim.jsont:1, rendered per row at

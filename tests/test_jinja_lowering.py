@@ -5,8 +5,10 @@ and the full-Jinja UDF path — the lowering is an optimization, never a
 semantics change.
 """
 
+import json
+import textwrap
+
 import pytest
-from pyspark.sql import functions as F
 
 from earthmover_spark.functions.jinja_compute import (
     jinja_udf_column,
@@ -71,14 +73,29 @@ LOWERABLE = [
     "{{qty|float * 2 + 0.25}}",
     "{{num|int / 4}}",
     "{{qty|round}}",
+    # Jinja's lexer drops ONE trailing newline — every YAML block
+    # scalar template (`x: |`) ends in one
+    "{{name}}\n",
+    "x {{num|int + 1}}\n",
+    "{% if flag == 'F' %}A{% else %}B{% endif %}\n",
+    "{{name}}\n\n",
+    # read by jinja2's own parser: nested blocks and block trim markers
+    "{% if qty > 1 %}{% if flag == 'F' %}n{% endif %}{% endif %}",
+    "{% if flag -%}x{% endif %}",
+    "{% if flag %} {%- if qty > 3 %}a{% else %}b{% endif -%} {% endif %}",
+    "a{# note #}b{{name}}",
+    "{{name[1:]}}",
 ]
 
 NOT_LOWERABLE = [
     "{{unknown_filter|wat}}",
+    "{{name|wat}}",  # unknown filter on a known column
+    "{{name if flag}}",  # inline if without else: Undefined not modeled
+    "{{name[-1]}}",  # negative index
+    "{{name[::2]}}",  # slice step
     "{% for x in items %}{{x}}{% endfor %}",
     "{{md5(name)}}",
     "{{__row_data__}}",
-    "{% if qty > 1 %}{% if flag == 'F' %}n{% endif %}{% endif %}",
     "{{num|int / qty|int}}",  # non-literal divisor: /0 raises in Python
     "{{num|int / 0}}",  # zero divisor: Python raises, Spark NULLs
     "{{num|int // 2}}",  # floor division not modeled
@@ -88,7 +105,6 @@ NOT_LOWERABLE = [
     "{% if name > 10 %}x{% endif %}",  # str vs int ordering: TypeError
     "{{qty|round(2)}}",  # fractional round: BigDecimal vs binary HALF_EVEN
     "{% if flag is odd %}x{% endif %}",  # unsupported is-test
-    "{% if flag -%}x{% endif %}",  # whitespace-control trim marker
     "{% if flag %}a{% else %}b{% else %}c{% endif %}",  # malformed
 ]
 
@@ -110,6 +126,37 @@ def test_lowered_matches_jinja(df, template):
 @pytest.mark.parametrize("template", NOT_LOWERABLE)
 def test_not_lowerable_falls_back(df, template):
     assert lower_template(template, df.columns, schema=df.schema) is None
+
+
+def test_block_scalar_template_in_yaml(spark, tmp_path):
+    """A YAML block scalar (`label: |`) ends the template in a newline,
+    which Jinja's lexer drops; the lowered column must drop it too."""
+    from earthmover_spark.plans.executor import run_project
+
+    (tmp_path / "people.csv").write_text("name,num\nalpha,10\nbeta,7\n")
+    (tmp_path / "earthmover.yaml").write_text(textwrap.dedent("""
+        config:
+          output_dir: ./out
+        sources:
+          people:
+            file: people.csv
+        transformations:
+          labeled:
+            source: $sources.people
+            operations:
+              - operation: add_columns
+                columns:
+                  label: |
+                    {%raw%}{{name}}-{{num|int + 1}}{%endraw%}
+        destinations:
+          out:
+            source: $transformations.labeled
+            extension: jsonl
+    """))
+    results = run_project(spark, str(tmp_path / "earthmover.yaml"))
+    with open(results["$destinations.out"]) as fh:
+        labels = sorted(json.loads(ln)["label"] for ln in fh if ln.strip())
+    assert labels == ["alpha-11", "beta-8"]
 
 
 def test_float_concat_renders_python_style(spark):
@@ -335,17 +382,15 @@ class TestDottedStructLowering:
 
 
 class TestSignAndTrimMarkers:
-    """r11 self-review fixes: negative literals after operators lower
-    correctly; leading-minus expressions and Jinja whitespace-control
-    markers ('{{-' trims — '{{-2}}' renders '2'!) must fall back."""
+    """Negative literals after operators lower correctly, and Jinja's
+    whitespace-control markers come from its own lexer: '{{-' trims,
+    so '{{-2}}' renders '2' and '{{-2 + num|int}}' is 2 + num. Every
+    case is byte-compared to the full engine."""
 
-    def test_negative_literal_after_operator(self, spark):
-        df = spark.createDataFrame([("10",)], ["num"])
-        for t, want in [
-            ("{{3 * -2}}", "-6"),
-            ("{{num|int * -1}}", "-10"),
-            ("{{num|int - -3}}", "13"),
-        ]:
+    @staticmethod
+    def _check(spark, cases):
+        df = spark.createDataFrame([("10", "ten")], ["num", "name"])
+        for t, want in cases:
             low = lower_template(t, df.columns)
             assert low is not None, t
             r = df.select(
@@ -353,23 +398,27 @@ class TestSignAndTrimMarkers:
             ).collect()[0]
             assert r.l == r.u == want, t
 
-    def test_leading_minus_falls_back(self, df):
-        # Jinja gives a leading unary minus surprising precedence
-        # ('{{-2 + num|int}}' != -2 + num); never lower it
-        assert lower_template("{{-2 + num|int}}", df.columns) is None
-        assert lower_template("{{(-2 + num|int)}}", df.columns) is None
+    def test_negative_literal_after_operator(self, spark):
+        self._check(spark, [
+            ("{{3 * -2}}", "-6"),
+            ("{{num|int * -1}}", "-10"),
+            ("{{num|int - -3}}", "13"),
+        ])
 
-    def test_trim_markers_fall_back(self, df):
-        # '{{-2}}' is whitespace-control + literal 2 in Jinja
-        assert lower_template("{{-2}}", df.columns) is None
-        assert lower_template("a {{- name}}", df.columns) is None
-        assert lower_template("{{name -}} b", df.columns) is None
-        # sanity: the UDF renders the trim semantics
-        sdf_cols = df.columns
-        got = df.select(
-            jinja_udf_column("x {{-2}}", sdf_cols).alias("v")
-        ).collect()[0].v
-        assert got == "x2"
+    def test_leading_minus_lowers(self, spark):
+        # '{{-' is a trim marker; inside parens the minus is a sign
+        self._check(spark, [
+            ("{{-2 + num|int}}", "12"),
+            ("{{(-2 + num|int)}}", "8"),
+        ])
+
+    def test_trim_markers_lower(self, spark):
+        self._check(spark, [
+            ("{{-2}}", "2"),
+            ("x {{-2}}", "x2"),
+            ("a {{- name}}", "aten"),
+            ("{{name -}} b", "tenb"),
+        ])
 
 
 class TestFlatTypeAwareLowering:
@@ -439,6 +488,8 @@ class TestFlatTypeAwareLowering:
             "{{d|int}}",
             "{% if d > 5 %}hi{% else %}lo{% endif %}",
             "{{(d|int + n)|string}}",
+            # a column is defined even when its type cannot render
+            "{% if b is defined %}d{% else %}u{% endif %}",
         ):
             low = lower_template(t, typed.columns, schema=typed.schema)
             assert low is not None, t

@@ -80,7 +80,7 @@ def _dotted_lowered() -> set:
 def _loop_templates() -> set:
     """The __row_data__ dict-dump loop templates (destination file +
     inline; whitespace differs between them) — native since the r13
-    AST loop unroll (jinja_compute._lower_loop_template): the
+    AST loop unroll (jinja_compute._ast_stmts): the
     iteration domain is the static column list, so the loop unrolls to
     a per-column concat inside whole-stage codegen."""
     return {
@@ -165,6 +165,92 @@ def test_golden_suite_lowering_manifest(spark, tmp_path):
         f"UDF-fallback set changed.\n extra={fell_back - expected_fb}\n"
         f" missing={expected_fb - fell_back}"
     )
+
+
+def _golden_frame(spark):
+    """Synthetic stand-in for the golden suite's frames: string
+    columns for every flat name, ``v`` for the ``{{value}}`` forms,
+    and a ``weather`` struct of long leaves for the dotted and
+    arithmetic month templates."""
+    from pyspark.sql import types as T
+
+    months = [
+        "January", "February", "March", "April", "May", "June",
+        "July", "August", "September", "October", "November",
+        "December",
+    ]
+    flat = [
+        "entity", "name", "count_column", "count", "family",
+        "all_lifespans", "all_lifespans_quoted", "id", "genus",
+        "species", "avg_lifespan_yrs", "avg_weight_kg",
+        "scientific_name", "branch", "v",
+    ]
+    by_month = T.StructType([T.StructField(m, T.LongType()) for m in months])
+    weather = T.StructType([
+        T.StructField("avg_days_of_rain", by_month),
+        T.StructField("temperatures", T.StructType([
+            T.StructField("avg_highs", by_month),
+            T.StructField("avg_lows", by_month),
+        ])),
+    ])
+    schema = T.StructType(
+        [T.StructField(c, T.StringType()) for c in flat]
+        + [T.StructField("weather", weather)]
+    )
+
+    def row(seed: int, text: list[str]):
+        leaves = [tuple(seed * 7 + i * k for i in range(12)) for k in (1, 3, 5)]
+        return tuple(text) + (
+            (leaves[0], (leaves[1], leaves[2])),
+        )
+
+    return spark.createDataFrame(
+        [
+            row(1, ["zoo", "Red Fox", "n_foxes", "12", "Canidae",
+                    "[5, 7]", '["5", "7"]', "1", "Vulpes", "vulpes",
+                    "5", "6.2", "Vulpes vulpes", "Mammal", " 2023-06 "]),
+            row(2, ["", "Emu", "", "", "", "", "", "", "", "", "",
+                    "", "", "", ""]),
+            row(3, ["z\t", " Owl ", "c", "x7", "Tytonidae", "[]", "[]",
+                    "3", "Tyto", "alba", "4", "0.5", "Tyto alba", "Bird",
+                    "1999"]),
+        ],
+        schema,
+    ), flat
+
+
+def test_golden_floor_lowers_without_reference(spark):
+    """Every template in EXPECTED_LOWERED lowers on a synthetic frame
+    and renders byte-identical to the full Jinja engine — the floor is
+    checked even where the reference checkout is absent and the
+    manifest test above skips."""
+    from earthmover_spark.functions.jinja_compute import (
+        jinja_udf_column,
+        lower_template,
+    )
+
+    df, flat = _golden_frame(spark)
+    loops = _loop_templates()
+    templates = sorted(EXPECTED_LOWERED)
+    assert len(templates) == 55
+    lowered, full = [], []
+    for i, t in enumerate(templates):
+        # destination dumps iterate every column: give them the flat
+        # string columns and the self-referencing __row_data__
+        cols = flat if t in loops else df.columns
+        self_rd = t in loops
+        vcol = "v" if "value" in t else None
+        low = lower_template(t, cols, vcol, df.schema, self_rd)
+        assert low is not None, t
+        lowered.append(low.alias(f"l{i}"))
+        full.append(
+            jinja_udf_column(t, cols, vcol, self_row_data=self_rd).alias(
+                f"f{i}"
+            )
+        )
+    for r in df.select(*lowered, *full).collect():
+        for i, t in enumerate(templates):
+            assert r[f"l{i}"] == r[f"f{i}"], t
 
 
 def test_macros_allow_lowering_gate():

@@ -733,7 +733,7 @@ def test_impute_median_matches_numpy_reference(spark, groups):
 
 
 # ---------------------------------------------------------------------------
-# r11: recursive arithmetic + dotted-access fuzz for the precedence parser
+# r11: recursive arithmetic + dotted-access fuzz for the arithmetic lowering
 # ---------------------------------------------------------------------------
 
 
@@ -762,8 +762,8 @@ def arith_exprs(draw, depth=0):
 @given(expr=arith_exprs())
 @settings(**SETTINGS)
 def test_arith_parser_matches_jinja(spark, expr):
-    """Every arithmetic expression the precedence parser lowers must
-    compute exactly what Jinja/Python computes — precedence, paren
+    """Every arithmetic expression must lower from jinja2's parse tree
+    and compute exactly what Jinja/Python computes — precedence, paren
     grouping, filter binding, truncating |int, dotted leaves."""
     from earthmover_spark.functions.jinja_compute import (
         jinja_udf_column,
@@ -788,7 +788,7 @@ def test_arith_parser_matches_jinja(spark, expr):
 
 
 # ---------------------------------------------------------------------------
-# r12: compound {% if %} condition fuzz — parser vs the full Jinja engine
+# r12: compound {% if %} condition fuzz — lowering vs the full Jinja engine
 # ---------------------------------------------------------------------------
 
 
@@ -840,8 +840,9 @@ def cond_exprs(draw, depth=0):
 @given(cond=cond_exprs())
 @settings(**SETTINGS)
 def test_condition_parser_matches_jinja(spark, cond):
-    """Every condition the r12 grammar lowers must pick the same
-    branch the full Jinja engine picks, on every row."""
+    """Every condition in the lowered surface (``_ast_condition``)
+    must lower and pick the same branch the full Jinja engine picks,
+    on every row."""
     from earthmover_spark.functions.jinja_compute import (
         jinja_udf_column,
         lower_template,
