@@ -175,18 +175,14 @@ def resolve_path(path: str, base_dir: str) -> str:
     return os.path.join(base_dir, path)
 
 
-def yaml_keys(value):
-    """``value`` with every bare ``on:`` key named again: YAML 1.1
-    reads it as boolean True. join_stream / enrich_stream take an
+def yaml_keys(op_cfg: dict) -> dict:
+    """An operation's config with a bare ``on:`` key named again: YAML
+    1.1 reads it as boolean True. join_stream / enrich_stream take an
     ``on`` parameter, and a True key next to string keys cannot be
-    sorted when the config is hashed."""
-    if isinstance(value, dict):
-        return {
-            ("on" if k is True else k): yaml_keys(v) for k, v in value.items()
-        }
-    if isinstance(value, list):
-        return [yaml_keys(v) for v in value]
-    return value
+    sorted when the config is hashed. Only the operation's own keys are
+    renamed: a nested ``true:`` is data (a boolean stratum in
+    ``fractions``, a ``map_values`` key) and stays True."""
+    return {("on" if k is True else k): v for k, v in op_cfg.items()}
 
 
 def _absolutize_paths(cfg: dict, base_dir: str) -> dict:

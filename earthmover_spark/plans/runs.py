@@ -48,13 +48,21 @@ def _node_files(project: ProjectConfig) -> list[str]:
     return sorted({resolve_path(f, project.base_dir) for f in files})
 
 
+def _hashable(cfg: dict) -> dict:
+    """A node config with its operations' keys named as the executor
+    reads them (see ``yaml_keys``)."""
+    if not cfg.get("operations"):
+        return cfg
+    return {**cfg, "operations": [yaml_keys(op) for op in cfg["operations"]]}
+
+
 def compute_hashes(
     project: ProjectConfig, params: dict | None, selector: str
 ) -> dict[str, str]:
     config_hash = hashlib.md5(
         json.dumps(
             {
-                n: yaml_keys(node.config)
+                n: _hashable(node.config)
                 for n, node in sorted(project.nodes().items())
             },
             sort_keys=True,

@@ -7,6 +7,7 @@ accepts, including YAML 1.1's boolean reading of a bare ``on:`` key.
 """
 
 import glob
+import json
 import os
 import shutil
 import textwrap
@@ -22,8 +23,42 @@ EXAMPLES = os.path.join(os.path.dirname(__file__), "..", "examples")
 
 def test_yaml_keys_names_bare_on():
     assert yaml_keys({True: "id", "how": "left"}) == {"on": "id", "how": "left"}
-    assert yaml_keys([{"ops": [{True: 1}]}]) == [{"ops": [{"on": 1}]}]
-    assert yaml_keys("on") == "on"
+    nested = {"operation": "map_values", "mapping": {True: "Y", False: "N"}}
+    assert yaml_keys(nested) == nested
+
+
+def test_nested_true_key_stays_boolean(spark, tmp_path):
+    """Only an operation's own keys are renamed: ``fractions: {true: 1.0}``
+    keys a boolean stratum, and the run must also hash it."""
+    (tmp_path / "docs.jsonl").write_text("".join(
+        f'{{"doc_id": {i}, "is_en": {"true" if i % 3 == 0 else "false"}}}\n'
+        for i in range(30)
+    ))
+    (tmp_path / "earthmover.yaml").write_text(textwrap.dedent("""
+        config:
+          output_dir: ./out
+        sources:
+          docs:
+            file: docs.jsonl
+        transformations:
+          english:
+            source: $sources.docs
+            operations:
+              - operation: stratified_sample
+                strata_col: is_en
+                fractions: {true: 1.0, false: 0.0}
+                key_col: doc_id
+        destinations:
+          out:
+            source: $transformations.english
+            extension: jsonl
+    """))
+    run_project(spark, str(tmp_path / "earthmover.yaml"),
+                runs_file=str(tmp_path / "runs.csv"))
+    lines = (tmp_path / "out" / "out.jsonl").read_text().splitlines()
+    assert sorted(int(json.loads(ln)["doc_id"]) for ln in lines) == list(
+        range(0, 30, 3)
+    )
 
 
 def test_bare_on_key_hashes_like_quoted_on(tmp_path):
