@@ -1,6 +1,10 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
 sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
-{"metric": ..., "value": <total sec>, "unit": "sec", "queries": {...}, "sf": ...}
+{"metric": ..., "value": <total sec>, "unit": "sec", "queries": {...}, "sf": ...,
+ "warmup": {step: sec}}
+
+The session is warmed first (`tools/query_profile.py:warm_session`, on
+synthetic data); `warmup` is its manifest.
 
 Includes `em_pipeline`, a re-creation of the reference's published
 throughput scenario (map_values + rename_columns + add_columns +
@@ -17,6 +21,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from tools.query_profile import force, warm_session  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 #: headline queries from __spark_entry__ (one per operator family)
@@ -32,7 +38,7 @@ HEADLINE = [
     "melt",
     "pivot",
     "sort_limit_rows",
-    "jinja_conditional",  # full-Jinja pandas_udf path
+    "jinja_conditional",  # if/else template, lowered to a native CASE
     "add_columns_jinja_arith",  # lowered-Jinja native path
     "dedup_exact",
     "dedup_minhash_lsh",
@@ -197,11 +203,6 @@ SECONDARY = [
 ]
 
 
-def _force(df) -> int:
-    """Execute the full plan without materializing to the driver."""
-    return df.write.format("noop").mode("overwrite").save() or 0
-
-
 def em_pipeline(spark, sf_dir: str):
     """The reference's flagship throughput pipeline, re-expressed:
     map_values + rename_columns + add_columns(Jinja) + JSON render
@@ -264,124 +265,29 @@ def main() -> None:
 
     spark = get_spark("bench")
     qmap = entry.queries()
-    timings: dict[str, float] = {}
-
-    # warm the JVM/session so query 1 isn't charged for startup — the
-    # original intent of this block. Beyond the bare action, touch the
-    # machinery nearly every query exercises once per session (first
-    # shuffle exchange, first broadcast join, first window, first
-    # json/codegen path) over synthetic range data (never the test
-    # data), so those one-time costs don't land on whichever queries
-    # happen to run first.
-    from pyspark.sql import Window as _W
-    from pyspark.sql import functions as _F
-
-    spark.range(1).count()
-    _warm = spark.range(1000).select(
-        _F.col("id"), (_F.col("id") % 7).alias("k")
-    )
-    _warm.groupBy("k").count().count()  # first shuffle + hash agg
-    _warm.join(
-        _F.broadcast(spark.range(7).withColumnRenamed("id", "k")), "k"
-    ).count()  # first broadcast exchange + BHJ
-    _warm.select(
-        _F.row_number().over(_W.partitionBy("k").orderBy("id")).alias("r")
-    ).count()  # first window
-    _warm.select(
-        _F.to_json(_F.struct("id", "k")).alias("j")
-    ).write.format("noop").mode("overwrite").save()  # first noop sink
-
-    # first JVM->Python boundary (r14): the python worker daemon fork,
-    # per-core worker spin-up and Arrow eval machinery cost ~2s once
-    # per session and landed on whichever Python-path query ran first
-    # (measured: multimodal_features 2.2s one-shot cold vs 0.7s after
-    # this warm-up, 0.3s warm). Synthetic range data only, same
-    # declared-additions-only contract as the r13 warm-up extension.
-    def _ident(batches):
-        yield from batches
-
-    spark.range(64).mapInPandas(
-        _ident, "id long"
-    ).write.format("noop").mode("overwrite").save()  # first MapInPandas
-
-    _inc = _F.udf(lambda x: x + 1, "long", useArrow=True)
-    spark.range(64).select(_inc("id")).write.format("noop").mode(
-        "overwrite"
-    ).save()  # first ArrowEvalPython
-
-    # first parquet scan (r14): the vectorized reader / footer /
-    # column-batch machinery initializes once per session and landed
-    # entirely on the first bench query (flagship one-shot measured
-    # 1.79 s without vs 1.04 s with this warm-up). Synthetic data
-    # round-tripped through a temp dir — the test data is never read.
-    import shutil as _shutil
-    import tempfile as _tempfile
-
-    _wdir = _tempfile.mkdtemp(prefix="bench_warm_pq_")
-    try:
-        spark.range(128).select(
-            "id", (_F.col("id") % 3).cast("string").alias("s")
-        ).write.mode("overwrite").parquet(f"{_wdir}/w.parquet")
-        spark.read.parquet(f"{_wdir}/w.parquet").write.format(
-            "noop"
-        ).mode("overwrite").save()
-    finally:
-        _shutil.rmtree(_wdir, ignore_errors=True)
-
-    # first MLlib fit (r14): pyspark.ml first use initializes Breeze /
-    # netlib BLAS (and its pure-JVM fallback path) plus the legacy
-    # MLlib RDD machinery — ~2 s once per session, previously charged
-    # to whichever query fit a model first (triplets_bucketed one-shot
-    # measured 7.0 s without vs 4.8 s with this warm-up, matched
-    # sessions). A 2-centroid, 1-iteration fit over 256 synthetic
-    # range rows; the test data is never touched.
-    try:
-        from pyspark.ml.clustering import KMeans as _KMeans
-        from pyspark.ml.functions import array_to_vector as _a2v
-
-        _syn = spark.range(256).select(
-            _a2v(
-                _F.array(
-                    *[
-                        ((_F.col("id") * (i + 1)) % 7).cast("double")
-                        for i in range(4)
-                    ]
-                )
-            ).alias("features")
-        )
-        _KMeans(k=2, seed=1, maxIter=1, initMode="random").fit(_syn)
-    except Exception:  # noqa: BLE001 — warm-up must never break bench
-        pass
+    warmup = warm_session(spark)
 
     # one failing query must never zero the whole suite: time what runs,
     # record errors per-query, and always emit the JSON line
-    errors: dict[str, str] = {}
-
-    for name in HEADLINE:
-        try:
-            fn = qmap[name]
-            t0 = time.perf_counter()
-            _force(fn(spark, SF_DIR))
-            timings[name] = round(time.perf_counter() - t0, 3)
-        except Exception as exc:  # noqa: BLE001 — bench must survive
-            errors[name] = f"{type(exc).__name__}: {exc}"[:300]
-
+    timings: dict[str, float] = {}
     secondary: dict[str, float] = {}
-    for name in SECONDARY:
-        try:
-            fn = qmap[name]
-            t0 = time.perf_counter()
-            _force(fn(spark, SF_DIR))
-            secondary[name] = round(time.perf_counter() - t0, 3)
-        except Exception as exc:  # noqa: BLE001 — bench must survive
-            errors[name] = f"{type(exc).__name__}: {exc}"[:300]
+    errors: dict[str, str] = {}
+    for names, into in ((HEADLINE, timings), (SECONDARY, secondary)):
+        for name in names:
+            try:
+                fn = qmap[name]
+                t0 = time.perf_counter()
+                force(fn(spark, SF_DIR))
+                into[name] = round(time.perf_counter() - t0, 3)
+            except Exception as exc:  # noqa: BLE001 — bench must survive
+                errors[name] = f"{type(exc).__name__}: {exc}"[:300]
 
     # reference-comparable throughput pipeline (plan execution only)
     em_sec = em_write_sec = None
     li_rows = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()
     try:
         t0 = time.perf_counter()
-        _force(em_pipeline(spark, SF_DIR))
+        force(em_pipeline(spark, SF_DIR))
         em_sec = time.perf_counter() - t0
         timings["em_pipeline"] = round(em_sec, 3)
     except Exception as exc:  # noqa: BLE001
@@ -412,7 +318,7 @@ def main() -> None:
     em_dump_sec = None
     try:
         t0 = time.perf_counter()
-        _force(em_rowdump(spark, SF_DIR))
+        force(em_rowdump(spark, SF_DIR))
         em_dump_sec = time.perf_counter() - t0
         secondary["em_rowdump"] = round(em_dump_sec, 3)
     except Exception as exc:  # noqa: BLE001
@@ -428,6 +334,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": float(m.group(1)) if m else os.path.basename(SF_DIR.rstrip("/")),
+        "warmup": warmup,
     }
     if secondary:
         payload["secondary"] = secondary

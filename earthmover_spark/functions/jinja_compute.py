@@ -35,8 +35,6 @@ Rendered results are StringType — the reference's all-string data model
 
 from __future__ import annotations
 
-import re
-
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -1068,13 +1066,6 @@ def lower_template(
 _TEMPLATE_CACHE: dict = {}  # per-process compile cache (executor-side)
 
 
-_MACRO_DEF_RE = re.compile(r"\{%-?\s*macro\s+([A-Za-z_][A-Za-z0-9_]*)")
-_MACRO_BLOCK_RE = re.compile(
-    r"\{%-?\s*macro\b.*?\bendmacro\s*-?%\}", re.DOTALL
-)
-_JINJA_COMMENT_RE = re.compile(r"\{#.*?#\}", re.DOTALL)
-
-
 def macros_allow_lowering(template: str, macros: str) -> bool:
     """True when the project's ``macros:`` block cannot affect this
     template's render, so the native lowering stays sound.
@@ -1083,30 +1074,42 @@ def macros_allow_lowering(template: str, macros: str) -> bool:
     change a render in exactly two ways: top-level statements/text
     outside macro definitions (a ``{% set %}``, stray text — both
     would leak into every render), or a defined macro actually being
-    CALLED by the template. When the macros string is purely
-    ``{% macro %}…{% endmacro %}`` definitions (plus whitespace and
-    comments) and none of the defined names is invoked, defining
-    macros is render-neutral — without this check, merely declaring a
-    project macro used to force EVERY row template in the project
-    (including the reference's own golden suite, which defines
-    ``test``/``test2`` but never calls them in row templates) onto
-    the 10-100x-slower Python UDF path.
+    used by the template. When the macros parse to ``{% macro %}``
+    definitions only (plus whitespace; comments never reach the tree)
+    and the template names none of them, defining macros is
+    render-neutral — without this check, merely declaring a project
+    macro used to force EVERY row template in the project (including
+    the reference's own golden suite, which defines ``test``/``test2``
+    but never calls them in row templates) onto the 10-100x-slower
+    Python UDF path.
 
-    A BARE occurrence of a defined macro name also blocks lowering,
-    not just a call: macro definitions shadow context variables, so a
-    template rendering ``{{ test }}`` over a column named ``test``
-    renders the macro OBJECT under full Jinja but the column value
-    under the lowered path."""
+    A BARE use of a defined macro name also blocks lowering, not just
+    a call: macro definitions shadow context variables, so a template
+    rendering ``{{ test }}`` over a column named ``test`` renders the
+    macro OBJECT under full Jinja but the column value under the
+    lowered path. Text that merely reads like a name (``test: {{x}}``)
+    is template data, not a ``Name`` node, and does not block."""
     if not macros:
         return True
-    stripped = _MACRO_BLOCK_RE.sub("", macros)
-    stripped = _JINJA_COMMENT_RE.sub("", stripped)
-    if stripped.strip():
-        return False  # top-level set/text — affects every render
-    return not any(
-        re.search(rf"\b{re.escape(name)}\b", template)
-        for name in _MACRO_DEF_RE.findall(macros)
-    )
+    import jinja2
+    from jinja2 import nodes
+
+    env = _environment()
+    try:
+        defs = env.parse(macros).body
+        tmpl = env.parse(template)
+    except jinja2.TemplateSyntaxError:
+        return False  # the full engine reports it
+    names = set()
+    for node in defs:
+        if isinstance(node, nodes.Macro):
+            names.add(node.name)
+        elif not isinstance(node, nodes.Output) or any(
+            not isinstance(d, nodes.TemplateData) or d.data.strip()
+            for d in node.nodes
+        ):
+            return False  # top-level set/text — affects every render
+    return not any(n.name in names for n in tmpl.find_all(nodes.Name))
 
 
 def _jinja_globals() -> dict:
@@ -1256,12 +1259,10 @@ def template_column(
     schema=None,
 ) -> Column:
     """Compile a Jinja template to a Column: native when lowerable
-    (includes, or macros that could affect the render, force the
+    (an include, or macros that could affect the render, force the
     fallback), else the pandas_udf renderer. Pass the frame ``schema``
     to enable dotted nested-struct lowering."""
-    if "{% include" not in template and macros_allow_lowering(
-        template, macros
-    ):
+    if macros_allow_lowering(template, macros):
         lowered = lower_template(
             template, columns, value_col, schema, self_row_data
         )

@@ -58,6 +58,11 @@ def _total_file_bytes(spark, files) -> int:
 LIGHT_SPREAD_MIN_BYTES = 8 << 20
 
 
+#: a shuffling repartition in an analyzed plan: round-robin
+#: (`Repartition 4, true`) or hash/range (`RepartitionByExpression`)
+_SHUFFLE_RE = re.compile(r"\bRepartition(ByExpression\b| \d+, true\b)")
+
+
 def spread_narrow_scan(df: DataFrame, min_total_bytes: int = 0) -> DataFrame:
     """Repartition genuinely narrow inputs up to cluster parallelism
     before CPU-heavy per-row derivations (k-gram hashing, token
@@ -112,15 +117,17 @@ def spread_narrow_scan(df: DataFrame, min_total_bytes: int = 0) -> DataFrame:
     # composed pipelines (clean_text -> redact_pii -> ...) each call
     # spread on a frame whose ONLY file metadata is the original narrow
     # scan, so every stage would stack one more redundant round-robin
-    # exchange. If the analyzed plan already repartitions above the
-    # scan, the frame is already wide — skip. Checked last so the
-    # plan-string walk is only paid when a spread would otherwise fire
-    # (never on the at-scale early-return paths above).
+    # exchange. If the analyzed plan already shuffles above the scan,
+    # the frame is already wide — skip. A coalesce (`Repartition N,
+    # false`) narrows instead, so it does not count. Checked last so
+    # the plan-string walk is only paid when a spread would otherwise
+    # fire (never on the at-scale early-return paths above).
     try:
-        if "Repartition" in df._jdf.queryExecution().analyzed().toString():
-            return df
-    except Exception:
-        pass
+        analyzed = df._jdf.queryExecution().analyzed().toString()
+    except AttributeError:  # Spark Connect frames have no _jdf
+        analyzed = ""
+    if _SHUFFLE_RE.search(analyzed):
+        return df
     return df.repartition(target)
 
 # ---------------------------------------------------------------------------

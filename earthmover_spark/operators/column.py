@@ -37,7 +37,7 @@ def _needs_jinja_udf(value: str, columns: list[str], value_col: str | None,
         macros_allow_lowering,
     )
 
-    if "{% include" in value or not macros_allow_lowering(value, macros):
+    if not macros_allow_lowering(value, macros):
         return True
     return lower_template(value, columns, value_col, schema) is None
 

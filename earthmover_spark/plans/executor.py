@@ -3,7 +3,8 @@
 
 Improvements over the reference noted in SURVEY.md §4:
 - a node feeding multiple downstream consumers is ``.persist()``ed
-  (the reference recomputes it per destination);
+  (the reference recomputes it per destination) and unpersisted when
+  the run ends, failed or not;
 - everything stays lazy until a destination writes.
 """
 
@@ -182,47 +183,55 @@ class Executor:
 
         node_stats: dict[str, dict] = {}
         t_start = time.time()
-        for name in order:
-            t0 = time.time()
-            node = self.graph.nodes[name]
-            if node.kind == "sources":
-                df = self._eval_source(name, node.config)
-            elif node.kind == "transformations":
-                df = self._eval_transformation(name, node.config)
-            else:
-                self._write_destination(name, node.config, out_dir)
+        persisted: list[DataFrame] = []
+        try:
+            for name in order:
+                t0 = time.time()
+                node = self.graph.nodes[name]
+                if node.kind == "sources":
+                    df = self._eval_source(name, node.config)
+                elif node.kind == "transformations":
+                    df = self._eval_transformation(name, node.config)
+                else:
+                    self._write_destination(name, node.config, out_dir)
+                    node_stats[name] = {"seconds": round(time.time() - t0, 3)}
+                    if self._show_progress(node.config):
+                        print(f"-- {name}: written in {node_stats[name]['seconds']}s")
+                    continue
+                if not df.isStreaming:
+                    self._check_expectations(name, node.config, df)
+                    if node.config.get("debug"):
+                        print(f"-- {name}: {len(df.columns)} columns {df.columns}")
+                        df.show(5, truncate=False)
+                    if node.config.get("repartition"):
+                        df = df.repartition(int(node.config["repartition"]))
+                    if consumers.get(name, 0) > 1:
+                        df = df.persist()
+                        persisted.append(df)
+                self.data[name] = df
                 node_stats[name] = {"seconds": round(time.time() - t0, 3)}
-                if self._show_progress(node.config):
-                    print(f"-- {name}: written in {node_stats[name]['seconds']}s")
-                continue
-            if not df.isStreaming:
-                self._check_expectations(name, node.config, df)
-                if node.config.get("debug"):
-                    print(f"-- {name}: {len(df.columns)} columns {df.columns}")
-                    df.show(5, truncate=False)
-                if node.config.get("repartition"):
-                    df = df.repartition(int(node.config["repartition"]))
-                if consumers.get(name, 0) > 1:
-                    df = df.persist()
-            self.data[name] = df
-            node_stats[name] = {"seconds": round(time.time() - t0, 3)}
 
-        if results_file:
-            # row counts force one count per node — opt-in, like the
-            # reference's --results-file (earthmover.py:409-419)
-            for name, df in self.data.items():
-                if name in node_stats and not df.isStreaming:
-                    node_stats[name]["rows"] = df.count()
-            with open(results_file, "w") as fh:
-                json.dump(
-                    {
-                        "total_seconds": round(time.time() - t_start, 3),
-                        "nodes": node_stats,
-                        "destinations": self.results,
-                    },
-                    fh,
-                    indent=2,
-                )
+            if results_file:
+                # row counts force one count per node — opt-in, like the
+                # reference's --results-file (earthmover.py:409-419)
+                for name, df in self.data.items():
+                    if name in node_stats and not df.isStreaming:
+                        node_stats[name]["rows"] = df.count()
+                with open(results_file, "w") as fh:
+                    json.dump(
+                        {
+                            "total_seconds": round(time.time() - t_start, 3),
+                            "nodes": node_stats,
+                            "destinations": self.results,
+                        },
+                        fh,
+                        indent=2,
+                    )
+        finally:
+            # fan-out caches are only shared within this run
+            for df in persisted:
+                df.unpersist()
+
         if show_graph:
             # DOT DAG next to the outputs (reference -g/--show-graph,
             # earthmover/__main__.py:94); row counts included when a

@@ -1392,3 +1392,18 @@ def test_spread_narrow_scan_short_circuits_when_already_spread(spark):
         )
     )
     assert p.count("RoundRobinPartitioning") <= 1
+
+
+def test_spread_narrow_scan_spreads_a_coalesced_frame(spark):
+    """A coalesce is ``Repartition 1, false`` in the analyzed plan: it
+    narrows the frame, so it must not pass for an earlier spread."""
+    from earthmover_spark.llm.textstats import spread_narrow_scan
+
+    df = spark.read.parquet(f"{SF_DIR}/documents.parquet").coalesce(1)
+    p = spread_narrow_scan(df)._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
+        )
+    )
+    target = spark.sparkContext.defaultParallelism
+    assert f"RoundRobinPartitioning({target})" in p

@@ -85,7 +85,16 @@ LOWERABLE = [
     "{% if flag %} {%- if qty > 3 %}a{% else %}b{% endif -%} {% endif %}",
     "a{# note #}b{{name}}",
     "{{name[1:]}}",
+    # the include is raw text, not an Include node
+    '{% raw %}{% include "x" %}{% endraw %}{{name}}',
+    # "test" here is template data, not a use of the macro `test`
+    "test: {{name}}",
 ]
+
+#: declared for every LOWERABLE case and used by none: full Jinja
+#: renders ``MACROS + template``, so defining it must not change a
+#: render nor keep ``template_column`` from lowering
+MACROS = "{% macro test() %}T{% endmacro %}"
 
 NOT_LOWERABLE = [
     "{{unknown_filter|wat}}",
@@ -113,14 +122,18 @@ NOT_LOWERABLE = [
 def test_lowered_matches_jinja(df, template):
     lowered = lower_template(template, df.columns, schema=df.schema)
     assert lowered is not None, f"expected lowerable: {template}"
-    native = [r.v for r in df.select(lowered.alias("v")).collect()]
-    via_jinja = [
-        r.v
-        for r in df.select(
-            jinja_udf_column(template, df.columns).alias("v")
-        ).collect()
-    ]
-    assert native == via_jinja, template
+    gated = template_column(
+        template, df.columns, macros=MACROS, schema=df.schema
+    )
+    gated_plan = df.select(gated)._jdf.queryExecution().executedPlan()
+    assert "EvalPython" not in gated_plan.toString(), template
+    rows = df.select(
+        lowered.alias("native"),
+        gated.alias("gated"),
+        jinja_udf_column(template, df.columns, macros=MACROS).alias("full"),
+    ).collect()
+    for r in rows:
+        assert r.native == r.gated == r.full, template
 
 
 @pytest.mark.parametrize("template", NOT_LOWERABLE)

@@ -1,8 +1,9 @@
-"""Run state: input hashing and the all-or-nothing single-file sink.
+"""Run state: input hashing, the all-or-nothing single-file sink and
+the fan-out cache.
 
 A run that fails must leave nothing behind that the next run could
 mistake for success: no truncated destination file, no runs-file entry,
-no temporary directory. Hashing must accept every config the executor
+no temporary directory. Succeeded or failed, it leaves no cached data. Hashing must accept every config the executor
 accepts, including YAML 1.1's boolean reading of a bare ``on:`` key.
 """
 
@@ -142,3 +143,39 @@ def test_failed_single_file_write_leaves_no_trace(spark, project, monkeypatch):
     assert out_file.read_bytes() == before
     assert runs_logged() == 1
     assert glob.glob(str(out_dir / "em_dest_*")) == []
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_run_releases_fan_out_persists(spark, project, monkeypatch):
+    """A node with two consumers is persisted for the run only: the
+    cache is released after a successful run and after a failed write."""
+    config = project / "earthmover.yaml"
+    config.write_text(textwrap.dedent("""
+        config:
+          output_dir: ./out
+        sources:
+          people:
+            file: people.csv
+        destinations:
+          a:
+            source: $sources.people
+            extension: jsonl
+          b:
+            source: $sources.people
+            extension: csv
+    """))
+    before = _persistent_rdds(spark)
+    results = run_project(spark, str(config), results_file=str(project / "r.json"))
+    assert set(results) == {"$destinations.a", "$destinations.b"}
+    assert _persistent_rdds(spark) == before
+
+    def broken_copy(src, dst, length=0):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(shutil, "copyfileobj", broken_copy)
+    with pytest.raises(Exception, match="disk full"):
+        run_project(spark, str(config))
+    assert _persistent_rdds(spark) == before
