@@ -187,7 +187,7 @@ def write_destination(
     # cap (mirrors the pandas-bridge size cap on the read side).
     try:
         est = estimated_plan_bytes(df)
-    except Exception:  # Spark Connect: no _jdf — skip the heuristic
+    except AttributeError:  # Spark Connect: no _jdf — skip the heuristic
         est = 0
     if est >= (1 << 63) - 1:
         # Long.MaxValue is Catalyst's UNKNOWN-stats sentinel (e.g. a

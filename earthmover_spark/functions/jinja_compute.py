@@ -6,21 +6,25 @@ earthmover/operations/column.py:53-59,115-121). Every template is
 parsed once, by ``jinja2``'s own parser, and then becomes one of two
 things:
 
-1. **A native Column** (`lower_template`): the parse tree is lowered
-   node by node — text, ``{{ }}`` outputs with the native filter set,
-   string slices, ``+ - * /`` arithmetic, dotted nested-struct access,
-   ``~`` concatenation, inline ``a if c else b``, float renders with
-   exact CPython-repr text (functions/pyfloat.py), ``{% if %}`` chains
-   whose tests span and/or/not, ``[not] in`` membership, ``is`` tests
-   and truthiness, plus ``{% for %}`` over a static domain and constant
-   ``{% set %}`` (unrolled at compile time). The result stays inside
-   whole-stage codegen: a lowered template never leaves the JVM.
-   Whitespace control, comments and Jinja's dropped trailing newline
-   come from the lexer, so they match the full engine by construction.
-   Fidelity rule: any node whose Spark semantics could diverge from
-   Jinja's (string '+', division by a runtime value, mixed-type
-   ordering, macros that could shadow a name, ...) DECLINES lowering
-   rather than approximating.
+1. **A native Column** (`lower_template`): the parse tree of
+   ``macros + template`` — the very source ``_compile`` renders — is
+   lowered node by node: text, ``{{ }}`` outputs with the native filter
+   set, string slices, ``+ - * / // %`` arithmetic, dotted nested-struct
+   access, ``~`` concatenation, inline ``a if c else b``, float renders
+   with exact CPython-repr text (functions/pyfloat.py), ``{% if %}``
+   chains whose tests span and/or/not, ``[not] in`` membership, ``is``
+   tests and truthiness, the ``md5`` global, project ``{% macro %}``
+   calls (the body is lowered in place), ``{% include "const" %}``
+   (the included tree is lowered in place), plus ``{% for %}`` over a
+   static domain and constant ``{% set %}`` (unrolled at compile time).
+   The result stays inside whole-stage codegen: a lowered template
+   never leaves the JVM. Whitespace control, comments, Jinja's dropped
+   trailing newline and any text around the macro definitions come
+   from the lexer and the tree, so they match the full engine by
+   construction. Fidelity rule: any node whose Spark semantics could
+   diverge from Jinja's (string '+', division by a runtime value,
+   mixed-type ordering, a bare macro name, recursion, ...) DECLINES
+   lowering rather than approximating.
 
 2. **The Arrow pandas_udf** (`jinja_udf_column`), when lowering
    declines: the full Jinja2 engine (filters, loops, conditionals,
@@ -34,6 +38,8 @@ Rendered results are StringType — the reference's all-string data model
 """
 
 from __future__ import annotations
+
+import functools
 
 import pandas as pd
 from pyspark.sql import Column
@@ -75,6 +81,26 @@ def _py_strip(c: Column) -> Column:
     return F.btrim(c.cast("string"), F.lit(_PY_WHITESPACE))
 
 
+_ASCII_LOWER = "abcdefghijklmnopqrstuvwxyz"
+_ASCII_UPPER = _ASCII_LOWER.upper()
+
+
+def _py_case(c: Column, upper: bool) -> Column:
+    """Python's ``str.upper()`` / ``str.lower()``. An all-ASCII string
+    (as many characters as UTF-8 bytes) changes case exactly by mapping
+    the 26 letters; only other strings reach Spark's upper/lower, whose
+    ICU case mapping builds a title-case table over every code point on
+    its first call in a JVM — 1-2 s on a 4-vCPU VM that every fresh run
+    of a project would otherwise pay."""
+    s = c.cast("string")
+    if upper:
+        src, dst, full_case = _ASCII_LOWER, _ASCII_UPPER, F.upper(s)
+    else:
+        src, dst, full_case = _ASCII_UPPER, _ASCII_LOWER, F.lower(s)
+    all_ascii = F.length(s) == F.octet_length(s)
+    return F.when(all_ascii, F.translate(s, src, dst)).otherwise(full_case)
+
+
 #: Jinja's |int and |float return 0 / 0.0 for unparseable input
 #: (jinja2 do_int/do_float default) — the goldens rely on ''|int == 0.
 #: |round is Jinja's method='common' = Python round() = HALF_EVEN, so
@@ -86,8 +112,8 @@ def _py_strip(c: Column) -> Column:
 _NATIVE_FILTERS = {
     "int": lambda c: (F.coalesce(_num(c), F.lit(0.0)).cast("long"), "int"),
     "float": lambda c: (F.coalesce(_num(c), F.lit(0.0)), "float"),
-    "upper": lambda c: (F.upper(c.cast("string")), "str"),
-    "lower": lambda c: (F.lower(c.cast("string")), "str"),
+    "upper": lambda c: (_py_case(c, upper=True), "str"),
+    "lower": lambda c: (_py_case(c, upper=False), "str"),
     "trim": lambda c: (_py_strip(c), "str"),
     # NULL ≡ '' (the all-string missing value) -> length 0, not NULL
     "length": lambda c: (F.coalesce(F.length(c.cast("string")), F.lit(0)), "int"),
@@ -154,7 +180,7 @@ def _flat_kind(name: str, schema) -> str:
         return "str"
     try:
         dt = schema[name].dataType
-    except Exception:
+    except KeyError:
         return "str"  # name not in this schema view — keep old behavior
     kind = _leaf_kind_of(dt)
     if kind is None:
@@ -200,7 +226,7 @@ def _resolve_name(
             raise _NotLowerable(name)
         try:
             dt = schema[parts[0]].dataType
-        except Exception as exc:
+        except KeyError as exc:
             raise _NotLowerable(name) from exc
         col = F.col(parts[0])
         for part in parts[1:]:
@@ -414,14 +440,53 @@ class _NotConst(Exception):
     pass
 
 
-class _ColRef:
-    """Loop-value binding from ``__row_data__.items()`` — a reference
-    to the column named ``name`` for the current unrolled iteration."""
+class _Frame:
+    """What a template lowers against: the frame's columns and schema,
+    the ``value`` column of a modify, whether ``__row_data__`` holds
+    itself (destination renders), and the Jinja environment whose
+    loader resolves ``{% include %}`` (``None`` loader: no includes).
+    ``including`` holds the includes being lowered, so a file that
+    includes itself declines instead of recursing."""
 
-    __slots__ = ("name",)
+    __slots__ = (
+        "columns", "value_col", "schema", "self_row_data", "jinja",
+        "including",
+    )
 
-    def __init__(self, name: str):
-        self.name = name
+    def __init__(self, columns, value_col, schema, self_row_data, jinja):
+        self.columns = columns
+        self.value_col = value_col
+        self.schema = schema
+        self.self_row_data = self_row_data
+        self.jinja = jinja
+        self.including: set = set()
+
+
+class _Bound:
+    """A name bound to a row-dependent value: a ``__row_data__.items()``
+    loop value or a macro parameter. ``lower()`` yields its
+    (Column, kind); it runs where the name is used, so a loop value
+    that cannot render (the destination's ``__row_data__`` self-key)
+    declines only the branches that use it."""
+
+    __slots__ = ("lower",)
+
+    def __init__(self, lower):
+        self.lower = lower
+
+
+class _Macro:
+    """A top-level ``{% macro %}`` and the env it was defined in. Jinja
+    resolves a body's free names in the template's top-level context
+    at call time, so ``scope`` is that env itself — a later top-level
+    ``{% set %}`` is seen, the caller's loop variables are not."""
+
+    __slots__ = ("node", "scope", "active")
+
+    def __init__(self, node, scope: dict):
+        self.node = node
+        self.scope = scope
+        self.active = False  # set while its body lowers: recursion
 
 
 def _ast_const(node, env):
@@ -435,7 +500,9 @@ def _ast_const(node, env):
     if isinstance(node, (nodes.List, nodes.Tuple)):
         return [_ast_const(i, env) for i in node.items]
     if isinstance(node, nodes.Name):
-        if node.name in env and not isinstance(env[node.name], _ColRef):
+        if node.name in env and not isinstance(
+            env[node.name], (_Bound, _Macro)
+        ):
             return env[node.name]
         raise _NotConst(node.name)
     if isinstance(node, nodes.Getattr):
@@ -524,8 +591,8 @@ def _const_lit(v):
     raise _NotLowerable(f"un-lowerable constant {v!r}")
 
 
-#: binary arithmetic that lowers on numeric kinds ('/' is handled
-#: apart: true division with a guarded divisor)
+#: binary arithmetic that lowers on numeric kinds ('/', '//' and '%'
+#: are handled apart: a nonzero constant divisor)
 _ARITH = {
     "Add": lambda a, b: a + b,
     "Sub": lambda a, b: a - b,
@@ -533,13 +600,46 @@ _ARITH = {
 }
 
 
-def _ast_expr_column(node, env, columns, value_col, schema):
+def _const_divisor(node, env):
+    """The right operand of ``/``, ``//`` or ``%`` as a nonzero numeric
+    constant. Python raises on a zero divisor where Spark yields NULL,
+    so a runtime divisor declines."""
+    try:
+        divisor = _ast_const(node.right, env)
+    except _NotConst as exc:
+        raise _NotLowerable("runtime divisor") from exc
+    if (
+        isinstance(divisor, bool)
+        or not isinstance(divisor, (int, float))
+        or divisor == 0
+    ):
+        raise _NotLowerable(f"divisor {divisor!r}")
+    return divisor
+
+
+def _floor_div_mod(left: Column, divisor: int, floor_div: bool) -> Column:
+    """Python's ``//`` / ``%`` of a long Column by a nonzero int constant.
+    Python floors: the quotient rounds toward -inf and the remainder
+    takes the divisor's sign. Spark's ``div`` and ``%`` truncate toward
+    zero, so where the remainder is nonzero with the wrong sign the
+    quotient steps down by one and the remainder moves by the divisor
+    — exact long arithmetic, never through double."""
+    d = F.lit(divisor)
+    rem = left % d
+    wrong_sign = (rem < 0) if divisor > 0 else (rem > 0)
+    if not floor_div:
+        return F.when(wrong_sign, rem + d).otherwise(rem)
+    quot = F.call_function("div", left, d)
+    return F.when(wrong_sign, quot - 1).otherwise(quot)
+
+
+def _ast_expr_column(node, env, fr: _Frame):
     """Lower an AST expression (under the compile-time env) ->
     (Column, kind)."""
     from jinja2 import nodes
 
     def lower(n):
-        return _ast_expr_column(n, env, columns, value_col, schema)
+        return _ast_expr_column(n, env, fr)
 
     try:
         return _const_lit(_ast_const(node, env))
@@ -559,21 +659,21 @@ def _ast_expr_column(node, env, columns, value_col, schema):
             if (
                 not isinstance(key, str)
                 or key == "__row_data__"
-                or key not in columns
+                or key not in fr.columns
             ):
                 raise _NotLowerable(f"__row_data__[{key!r}]")
-            return F.col(key), _flat_kind(key, schema)
-        return _ast_substring(node, env, columns, value_col, schema)
+            return F.col(key), _flat_kind(key, fr.schema)
+        return _ast_substring(node, env, fr)
     if isinstance(node, nodes.Name):
         ref = env.get(node.name)
-        if isinstance(ref, _ColRef):
-            if ref.name not in columns:
-                # the destination self-key's items() value is the dict
-                # itself — not lowerable
-                raise _NotLowerable(f"items() value of {ref.name!r}")
-            return F.col(ref.name), _flat_kind(ref.name, schema)
+        if isinstance(ref, _Bound):
+            return ref.lower()
         if node.name not in env:
-            return _resolve_name(node.name, columns, value_col, schema)
+            return _resolve_name(
+                node.name, fr.columns, fr.value_col, fr.schema
+            )
+        # a constant _const_lit rejects, or a bare macro name: Jinja
+        # renders the macro object even over a same-named column
         raise _NotLowerable(node.name)
     if isinstance(node, nodes.Getattr):
         # dotted nested-struct access ({{weather.avg_highs.Jan}})
@@ -584,7 +684,7 @@ def _ast_expr_column(node, env, columns, value_col, schema):
             cur = cur.node
         if isinstance(cur, nodes.Name) and cur.name not in env:
             dotted = ".".join([cur.name] + parts[::-1])
-            return _resolve_name(dotted, columns, value_col, schema)
+            return _resolve_name(dotted, fr.columns, fr.value_col, fr.schema)
         raise _NotLowerable("getattr base")
     if isinstance(node, nodes.Filter):
         if node.kwargs or node.dyn_args or node.dyn_kwargs:
@@ -597,6 +697,8 @@ def _ast_expr_column(node, env, columns, value_col, schema):
         except _NotConst as exc:
             raise _NotLowerable(node.name) from exc
         return _apply_filter_args(node.name, args, col, kind)
+    if isinstance(node, nodes.Call):
+        return _ast_call(node, env, fr)
     if isinstance(node, nodes.Concat):
         lowered = [lower(n) for n in node.nodes]
         return F.concat(*[_render_view(c, k) for c, k in lowered]), "str"
@@ -606,26 +708,31 @@ def _ast_expr_column(node, env, columns, value_col, schema):
         right, rk = lower(node.right)
         return _ARITH[op](left, right), _numeric_pair(lk, rk, op)
     if isinstance(node, nodes.Div):
-        # Python '/' is TRUE division (always float) and raises on
-        # zero where Spark yields NULL — only a nonzero numeric
-        # constant divisor keeps the semantics identical
-        try:
-            divisor = _ast_const(node.right, env)
-        except _NotConst as exc:
-            raise _NotLowerable("runtime divisor") from exc
-        if (
-            isinstance(divisor, bool)
-            or not isinstance(divisor, (int, float))
-            or divisor == 0
-        ):
-            raise _NotLowerable(f"divisor {divisor!r}")
+        # Python '/' is TRUE division (always float)
+        divisor = _const_divisor(node, env)
         left, lk = lower(node.left)
         _numeric_pair(lk, "float", op)
         return left / F.lit(divisor), "float"
+    if isinstance(node, (nodes.FloorDiv, nodes.Mod)):
+        divisor = _const_divisor(node, env)
+        floor_div = isinstance(node, nodes.FloorDiv)
+        # int kinds only (float floor division is not modeled); a
+        # divisor outside long range, or -1 under '//' (the one
+        # quotient, -Long.MIN_VALUE, that overflows a long), declines
+        if (
+            type(divisor) is not int
+            or not -(2**63) <= divisor < 2**63
+            or (floor_div and divisor == -1)
+        ):
+            raise _NotLowerable(f"{op} by {divisor!r}")
+        left, lk = lower(node.left)
+        if lk != "int":
+            raise _NotLowerable(f"{op} on {lk}")
+        return _floor_div_mod(left, divisor, floor_div), "int"
     if isinstance(node, nodes.CondExpr):
         if node.expr2 is None:
             raise _NotLowerable("inline if without else")
-        cond = _ast_condition(node.test, env, columns, value_col, schema)
+        cond = _ast_condition(node.test, env, fr)
         a, ak = lower(node.expr1)
         b, bk = lower(node.expr2)
         if ak == bk:
@@ -639,7 +746,97 @@ def _ast_expr_column(node, env, columns, value_col, schema):
     raise _NotLowerable(op)
 
 
-def _ast_substring(node, env, columns, value_col, schema):
+def _ast_call(node, env, fr: _Frame):
+    """A call: a project macro (its body lowered in place) or the
+    ``md5`` global. Anything else — ``fromjson``, methods, ``*args`` —
+    declines."""
+    from jinja2 import nodes
+
+    if (
+        node.dyn_args
+        or node.dyn_kwargs
+        or not isinstance(node.node, nodes.Name)
+    ):
+        raise _NotLowerable("call")
+    name = node.node.name
+    target = env.get(name)
+    if isinstance(target, _Macro):
+        return _call_macro(target, node, env, fr)
+    if (
+        name == "md5"
+        and name not in env
+        and name not in fr.columns  # a context variable shadows a global
+        and len(node.args) == 1
+        and not node.kwargs
+    ):
+        col, kind = _ast_expr_column(node.args[0], env, fr)
+        if kind != "str":
+            # pandas hands a nullable integral column over as floats,
+            # so str(x) of a number is not Spark's cast — decline
+            raise _NotLowerable(f"md5 of {kind}")
+        # the global is hashlib.md5(str(x).encode()): NULL -> 'None'
+        return F.md5(F.coalesce(col.cast("string"), F.lit("None"))), "str"
+    raise _NotLowerable(f"call {name}")
+
+
+def _call_macro(macro: _Macro, call, env, fr: _Frame):
+    """Lower ``m(args...)`` to the text of m's body (str kind). The
+    arguments are evaluated in the caller's env and bound in a copy of
+    the macro's scope, Jinja's scoping: the body sees its parameters,
+    the other macros, top-level ``{% set %}`` values and row columns,
+    never the caller's loop variables. A missing argument without a
+    default (Jinja renders Undefined), extra or unknown arguments,
+    ``caller``/``varargs``/``kwargs`` and recursion decline."""
+    from jinja2 import nodes
+
+    m = macro.node
+    if macro.active:
+        raise _NotLowerable(f"recursive macro {m.name}")
+    if any(
+        n.name in ("caller", "varargs", "kwargs")
+        for n in m.find_all(nodes.Name)
+    ):
+        raise _NotLowerable(f"macro {m.name} takes caller/varargs/kwargs")
+    params = [a.name for a in m.args]
+    if len(call.args) > len(params):
+        raise _NotLowerable(f"too many arguments to {m.name}")
+    given = dict(zip(params, call.args))
+    for kw in call.kwargs:
+        if kw.key not in params or kw.key in given:
+            raise _NotLowerable(f"{m.name}: keyword {kw.key}")
+        given[kw.key] = kw.value
+    defaults = dict(zip(params[len(params) - len(m.defaults):], m.defaults))
+    body_env = dict(macro.scope)
+    for p in params:
+        if p in given:
+            body_env[p] = _bind(given[p], env, fr)
+        elif p in defaults:
+            try:
+                body_env[p] = _ast_const(defaults[p], {})
+            except _NotConst as exc:
+                raise _NotLowerable(f"{m.name}: default of {p}") from exc
+        else:
+            raise _NotLowerable(f"{m.name}: missing argument {p}")
+    pieces: list = []
+    macro.active = True
+    try:
+        _ast_stmts(m.body, body_env, fr, pieces)
+    finally:
+        macro.active = False
+    return _assemble_pieces(pieces), "str"
+
+
+def _bind(node, env, fr: _Frame):
+    """An argument's value: a compile-time constant when it folds (so
+    the body's tests over it fold too), else a ``_Bound`` Column."""
+    try:
+        return _ast_const(node, env)
+    except _NotConst:
+        lowered = _ast_expr_column(node, env, fr)
+        return _Bound(lambda: lowered)
+
+
+def _ast_substring(node, env, fr: _Frame):
     """``s[i]`` / ``s[a:b]`` on a str-kind column -> substring. Only
     constant, non-negative bounds with ``b >= a`` lower (Python's
     negative-index and step rules are not modeled). On a non-string,
@@ -648,7 +845,7 @@ def _ast_substring(node, env, columns, value_col, schema):
 
     if not isinstance(node.node, (nodes.Name, nodes.Getattr)):
         raise _NotLowerable("getitem base")
-    col, kind = _ast_expr_column(node.node, env, columns, value_col, schema)
+    col, kind = _ast_expr_column(node.node, env, fr)
     if kind != "str":
         raise _NotLowerable(f"[] on {kind}")
 
@@ -675,7 +872,7 @@ def _ast_substring(node, env, columns, value_col, schema):
     return F.substring(s, start + 1, stop - start), "str"
 
 
-def _ast_condition(node, env, columns, value_col, schema) -> Column:
+def _ast_condition(node, env, fr: _Frame) -> Column:
     """Lower an ``{% if %}`` / inline-if test to a NON-NULL boolean
     Column with Python two-valued semantics.
 
@@ -716,10 +913,10 @@ def _ast_condition(node, env, columns, value_col, schema) -> Column:
     from jinja2 import nodes
 
     def cond(n):
-        return _ast_condition(n, env, columns, value_col, schema)
+        return _ast_condition(n, env, fr)
 
     def lower(n):
-        return _ast_expr_column(n, env, columns, value_col, schema)
+        return _ast_expr_column(n, env, fr)
 
     try:
         return F.lit(bool(_ast_const(node, env)))
@@ -746,9 +943,9 @@ def _ast_condition(node, env, columns, value_col, schema) -> Column:
                 name = node.node.name
                 return F.lit(
                     name in env
-                    or name in columns
+                    or name in fr.columns
                     or name == "__row_data__"
-                    or (name == "value" and value_col is not None)
+                    or (name == "value" and fr.value_col is not None)
                 )
             lower(node.node)
             return F.lit(True)
@@ -791,9 +988,7 @@ def _ast_condition(node, env, columns, value_col, schema) -> Column:
         lnode = node.expr
         for op in node.ops:
             if op.op in ("in", "notin"):
-                base = _ast_membership_node(
-                    lnode, op.expr, env, columns, value_col, schema
-                )
+                base = _ast_membership_node(lnode, op.expr, env, fr)
                 c = ~base if op.op == "notin" else base
             elif op.op in _CMP_OPS:
                 left, lk = lower(lnode)
@@ -814,12 +1009,12 @@ def _ast_condition(node, env, columns, value_col, schema) -> Column:
     return _as_bool(col != F.lit(0))
 
 
-def _ast_membership_node(lnode, rnode, env, columns, value_col, schema):
+def _ast_membership_node(lnode, rnode, env, fr: _Frame):
     """``A in B`` -> non-null boolean. B may be a compile-time list or
     tuple (items whose kind cannot match A's drop out — Python
     cross-type equality is False) or a str-kind expression (substring
     containment, Python's ``'x' in 'xyz'``)."""
-    left, lk = _ast_expr_column(lnode, env, columns, value_col, schema)
+    left, lk = _ast_expr_column(lnode, env, fr)
     try:
         items = _ast_const(rnode, env)
     except _NotConst:
@@ -835,7 +1030,7 @@ def _ast_membership_node(lnode, rnode, env, columns, value_col, schema):
                 F.contains(F.lit(items), string_view(left))
             )
         raise _NotLowerable(f"in {type(items).__name__}")
-    rcol, rkind = _ast_expr_column(rnode, env, columns, value_col, schema)
+    rcol, rkind = _ast_expr_column(rnode, env, fr)
     if lk != "str" or rkind != "str":
         # Python raises TypeError on 5 in 'xyz'
         raise _NotLowerable("in: both sides must be str")
@@ -843,7 +1038,7 @@ def _ast_membership_node(lnode, rnode, env, columns, value_col, schema):
     return _as_bool(F.contains(string_view(rcol), string_view(left)))
 
 
-def _for_domain(node, env, columns, self_row_data):
+def _for_domain(node, env, fr: _Frame):
     """Resolve a For node's iteration domain at compile time.
 
     Returns ``("keys", [names])`` for ``__row_data__`` /
@@ -856,7 +1051,7 @@ def _for_domain(node, env, columns, self_row_data):
     from jinja2 import nodes
 
     it = node.iter
-    keys = list(columns) + (["__row_data__"] if self_row_data else [])
+    keys = list(fr.columns) + (["__row_data__"] if fr.self_row_data else [])
     if (
         isinstance(it, nodes.Name)
         and it.name == "__row_data__"
@@ -885,13 +1080,14 @@ def _for_domain(node, env, columns, self_row_data):
     raise _NotLowerable(f"for over {type(dom).__name__}")
 
 
-def _ast_stmts(body, env, columns, value_col, schema, self_row_data, pieces):
+def _ast_stmts(body, env, fr: _Frame, pieces, top: bool = False):
     """Compile a statement list, appending str literals / Columns to
-    ``pieces``."""
+    ``pieces``. ``top`` marks a template's (or include's) top level,
+    the only place a ``{% macro %}`` definition lowers."""
     from jinja2 import nodes
 
     def stmts(b, env2, out):
-        _ast_stmts(b, env2, columns, value_col, schema, self_row_data, out)
+        _ast_stmts(b, env2, fr, out)
 
     def branch(b) -> Column:
         # a runtime-conditional branch gets a COPY of the env: a
@@ -912,9 +1108,9 @@ def _ast_stmts(body, env, columns, value_col, schema, self_row_data, pieces):
                 try:
                     pieces.append(_jinja_str(_ast_const(child, env)))
                 except _NotConst:
-                    pieces.append(_render_view(*_ast_expr_column(
-                        child, env, columns, value_col, schema
-                    )))
+                    pieces.append(
+                        _render_view(*_ast_expr_column(child, env, fr))
+                    )
         elif isinstance(node, nodes.If):
             # constant tests (loop var / loop.* / literals) fold away
             # branch-by-branch; ROW-DEPENDENT tests (r13b) compile via
@@ -932,9 +1128,7 @@ def _ast_stmts(body, env, columns, value_col, schema, self_row_data, pieces):
                 try:
                     truth = bool(_ast_const(test, env))
                 except _NotConst:
-                    cond = _ast_condition(
-                        test, env, columns, value_col, schema
-                    )
+                    cond = _ast_condition(test, env, fr)
                     runtime.append((cond, b))
                     continue
                 if truth:
@@ -963,7 +1157,7 @@ def _ast_stmts(body, env, columns, value_col, schema, self_row_data, pieces):
         elif isinstance(node, nodes.For):
             if node.else_ or node.test is not None or node.recursive:
                 raise _NotLowerable("for-else/filtered/recursive loop")
-            mode, domain = _for_domain(node, env, columns, self_row_data)
+            mode, domain = _for_domain(node, env, fr)
             n = len(domain)
             for i, item in enumerate(domain):
                 env2 = dict(env)
@@ -989,17 +1183,69 @@ def _ast_stmts(body, env, columns, value_col, schema, self_row_data, pieces):
                     kname, vname = (t.name for t in node.target.items)
                     env2[kname] = item
                     # the destination self-key's value is the dict
-                    # itself; _ColRef('__row_data__') never resolves,
-                    # so a branch USING it declines — branches that
-                    # filter it out constant-fold first and stay sound
-                    env2[vname] = _ColRef(item)
+                    # itself and never resolves, so a branch USING it
+                    # declines — branches that filter it out
+                    # constant-fold first and stay sound
+                    env2[vname] = _Bound(
+                        lambda item=item: _items_value(item, fr)
+                    )
                 else:
                     if not isinstance(node.target, nodes.Name):
                         raise _NotLowerable("unsupported for target")
                     env2[node.target.name] = item
                 stmts(node.body, env2, pieces)
+        elif isinstance(node, nodes.Macro):
+            if not top:
+                raise _NotLowerable("{% macro %} below the top level")
+            env[node.name] = _Macro(node, env)
+        elif isinstance(node, nodes.Include):
+            name, tree = _include_tree(node, fr)
+            # the include renders with a copy of the current context:
+            # it sees macros, sets and loop variables (but not the
+            # enclosing ``loop`` object), and its own sets and macros
+            # do not leak out
+            inner = {k: v for k, v in env.items() if k != "loop"}
+            fr.including.add(name)
+            try:
+                _ast_stmts(tree.body, inner, fr, pieces, top=True)
+            finally:
+                fr.including.discard(name)
         else:
             raise _NotLowerable(type(node).__name__)
+
+
+def _items_value(name: str, fr: _Frame):
+    """The value bound by a ``__row_data__.items()`` loop."""
+    if name not in fr.columns:
+        raise _NotLowerable(f"items() value of {name!r}")
+    return F.col(name), _flat_kind(name, fr.schema)
+
+
+def _include_tree(node, fr: _Frame):
+    """(name, parse tree) of ``{% include "const" %}``, fetched through
+    the environment's loader exactly as Jinja's ``get_template`` does.
+    No loader, a dynamic name, ``ignore missing``, ``without context``,
+    a missing file or an include cycle declines."""
+    import jinja2
+    from jinja2 import nodes
+
+    loader = fr.jinja.loader
+    if (
+        loader is None
+        or node.ignore_missing
+        or not node.with_context
+        or not isinstance(node.template, nodes.Const)
+        or not isinstance(node.template.value, str)
+    ):
+        raise _NotLowerable("include")
+    name = node.template.value
+    if name in fr.including:
+        raise _NotLowerable(f"recursive include {name!r}")
+    try:
+        source, filename, _ = loader.get_source(fr.jinja, name)
+    except jinja2.TemplateNotFound as exc:
+        raise _NotLowerable(f"include {name!r} not found") from exc
+    return name, fr.jinja.parse(source, name, filename)
 
 
 def _assemble_pieces(pieces: list) -> Column:
@@ -1030,16 +1276,20 @@ def lower_template(
     value_col: str | None = None,
     schema=None,
     self_row_data: bool = False,
+    *,
+    macros: str = "",
+    loader_dir=None,
 ) -> Column | None:
     """Try to compile a Jinja template to a native StringType Column.
 
-    The template is parsed by ``jinja2`` (same environment settings as
-    the UDF's ``_compile``) and its tree lowered by ``_ast_stmts``: see
-    the module docstring for the surface, ``_ast_condition`` for tests
-    and the NULL conventions. ``schema`` enables typed columns and
-    dotted nested-struct access. Returns None when the template needs
-    the full Jinja engine — including a syntax error, which the engine
-    then reports.
+    ``macros + template`` — the source ``_compile`` renders — is parsed
+    once by ``jinja2`` (the same environment, with ``loader_dir`` as the
+    ``{% include %}`` search path) and its tree lowered by
+    ``_ast_stmts``: see the module docstring for the surface,
+    ``_ast_condition`` for tests and the NULL conventions. ``schema``
+    enables typed columns and dotted nested-struct access. Returns None
+    when the template needs the full Jinja engine — including a syntax
+    error, which the engine then reports.
     """
     import jinja2
 
@@ -1048,12 +1298,12 @@ def lower_template(
         # dict AFTER creation — a __row_data__ shape lowering does not
         # model (destinations never pass value_col)
         return None
+    jinja = _environment(_search_path(loader_dir))
+    fr = _Frame(columns, value_col, schema, self_row_data, jinja)
     pieces: list = []
     try:
-        ast = _environment().parse(template)
-        _ast_stmts(
-            ast.body, {}, columns, value_col, schema, self_row_data, pieces
-        )
+        tree = jinja.parse(macros + template)
+        _ast_stmts(tree.body, {}, fr, pieces, top=True)
     except (jinja2.TemplateSyntaxError, _NotLowerable):
         return None
     return _assemble_pieces(pieces)
@@ -1064,52 +1314,6 @@ def lower_template(
 # ---------------------------------------------------------------------------
 
 _TEMPLATE_CACHE: dict = {}  # per-process compile cache (executor-side)
-
-
-def macros_allow_lowering(template: str, macros: str) -> bool:
-    """True when the project's ``macros:`` block cannot affect this
-    template's render, so the native lowering stays sound.
-
-    Jinja compiles ``macros + template`` as one source, so macros can
-    change a render in exactly two ways: top-level statements/text
-    outside macro definitions (a ``{% set %}``, stray text — both
-    would leak into every render), or a defined macro actually being
-    used by the template. When the macros parse to ``{% macro %}``
-    definitions only (plus whitespace; comments never reach the tree)
-    and the template names none of them, defining macros is
-    render-neutral — without this check, merely declaring a project
-    macro used to force EVERY row template in the project (including
-    the reference's own golden suite, which defines ``test``/``test2``
-    but never calls them in row templates) onto the 10-100x-slower
-    Python UDF path.
-
-    A BARE use of a defined macro name also blocks lowering, not just
-    a call: macro definitions shadow context variables, so a template
-    rendering ``{{ test }}`` over a column named ``test`` renders the
-    macro OBJECT under full Jinja but the column value under the
-    lowered path. Text that merely reads like a name (``test: {{x}}``)
-    is template data, not a ``Name`` node, and does not block."""
-    if not macros:
-        return True
-    import jinja2
-    from jinja2 import nodes
-
-    env = _environment()
-    try:
-        defs = env.parse(macros).body
-        tmpl = env.parse(template)
-    except jinja2.TemplateSyntaxError:
-        return False  # the full engine reports it
-    names = set()
-    for node in defs:
-        if isinstance(node, nodes.Macro):
-            names.add(node.name)
-        elif not isinstance(node, nodes.Output) or any(
-            not isinstance(d, nodes.TemplateData) or d.data.strip()
-            for d in node.nodes
-        ):
-            return False  # top-level set/text — affects every render
-    return not any(n.name in names for n in tmpl.find_all(nodes.Name))
 
 
 def _jinja_globals() -> dict:
@@ -1123,11 +1327,12 @@ def _jinja_globals() -> dict:
     }
 
 
+@functools.lru_cache(maxsize=32)
 def _environment(dirs: tuple = ()):
     """The one Jinja environment configuration: ``lower_template``
     parses with it and ``_compile`` renders with it, so lexing
-    (whitespace control, the dropped trailing newline) is identical on
-    both paths."""
+    (whitespace control, the dropped trailing newline) and include
+    lookup are identical on both paths."""
     import jinja2
 
     loader = jinja2.FileSystemLoader(list(dirs)) if dirs else None
@@ -1136,14 +1341,17 @@ def _environment(dirs: tuple = ()):
     return env
 
 
-def _compile(template: str, macros: str, loader_dir=None):
+def _search_path(loader_dir) -> tuple:
     """``loader_dir`` may be one directory or a search-path list —
     `{% include %}` resolves against the config dir first (reference
     destination.py:74) and the template's own dir second."""
-    dirs = (
-        tuple(loader_dir) if isinstance(loader_dir, (list, tuple))
-        else (loader_dir,) if loader_dir else ()
-    )
+    if isinstance(loader_dir, (list, tuple)):
+        return tuple(loader_dir)
+    return (loader_dir,) if loader_dir else ()
+
+
+def _compile(template: str, macros: str, loader_dir=None):
+    dirs = _search_path(loader_dir)
     key = (template, macros, dirs)
     tmpl = _TEMPLATE_CACHE.get(key)
     if tmpl is None:
@@ -1258,16 +1466,17 @@ def template_column(
     self_row_data: bool = False,
     schema=None,
 ) -> Column:
-    """Compile a Jinja template to a Column: native when lowerable
-    (an include, or macros that could affect the render, force the
-    fallback), else the pandas_udf renderer. Pass the frame ``schema``
-    to enable dotted nested-struct lowering."""
-    if macros_allow_lowering(template, macros):
-        lowered = lower_template(
-            template, columns, value_col, schema, self_row_data
-        )
-        if lowered is not None:
-            return lowered
+    """Compile a Jinja template to a Column: native when
+    ``lower_template`` lowers ``macros + template`` (macro calls and
+    constant includes lower in place), else the pandas_udf renderer.
+    Pass the frame ``schema`` to enable typed and dotted nested-struct
+    lowering."""
+    lowered = lower_template(
+        template, columns, value_col, schema, self_row_data,
+        macros=macros, loader_dir=loader_dir,
+    )
+    if lowered is not None:
+        return lowered
     return jinja_udf_column(
         template, columns, value_col, macros, loader_dir, self_row_data
     )

@@ -32,14 +32,11 @@ def _is_template(value) -> bool:
 def _needs_jinja_udf(value: str, columns: list[str], value_col: str | None,
                      macros: str, schema=None) -> bool:
     """True when `template_column` would fall back to the pandas UDF."""
-    from earthmover_spark.functions.jinja_compute import (
-        lower_template,
-        macros_allow_lowering,
-    )
+    from earthmover_spark.functions.jinja_compute import lower_template
 
-    if not macros_allow_lowering(value, macros):
-        return True
-    return lower_template(value, columns, value_col, schema) is None
+    return lower_template(
+        value, columns, value_col, schema, macros=macros
+    ) is None
 
 
 def _flush_jinja_batch(out: DataFrame, pending: list, macros: str) -> DataFrame:

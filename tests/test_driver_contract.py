@@ -82,9 +82,8 @@ def test_no_oracle_emits_driver_lossy_types(sf_dir):
 
 
 #: queries allowed a vectorized (Arrow-batched) Python stage, each
-#: documented: jinja_md5 exercises the full-Jinja pandas_udf path by
-#: design; norm_nfc needs Python's unicodedata for NFC normalization
-ARROW_PYTHON_OK = {"jinja_md5", "norm_nfc"}
+#: documented: norm_nfc needs Python's unicodedata for NFC normalization
+ARROW_PYTHON_OK = {"norm_nfc"}
 
 
 @pytest.fixture(scope="module")

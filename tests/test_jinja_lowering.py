@@ -25,6 +25,24 @@ def df(spark):
     )
 
 
+#: the ``{% include %}`` files every case may use (``loader_dir``)
+INCLUDES = {
+    # a filter, and a trailing newline the lexer drops
+    "filtered.j": "{{ name|upper }}/{{ num|int + 1 }}\n",
+    # reads the enclosing loop's variable
+    "looped.j": "{{ q }}={{ flag }};",
+    "loop_index.j": "{{ loop.index }}",
+}
+
+
+@pytest.fixture(scope="module")
+def includes(tmp_path_factory):
+    d = tmp_path_factory.mktemp("includes")
+    for name, text in INCLUDES.items():
+        (d / name).write_text(text)
+    return str(d)
+
+
 LOWERABLE = [
     "plain text only",
     "{{name}}",
@@ -79,6 +97,24 @@ LOWERABLE = [
     "x {{num|int + 1}}\n",
     "{% if flag == 'F' %}A{% else %}B{% endif %}\n",
     "{{name}}\n\n",
+    # project macros lower in place (see MACROS)
+    "{{test()}}",
+    "{{ tag(name, end='!') }}",  # a default and a keyword argument
+    "{{ both(name, num) }}",  # a macro calling macros
+    "{{ labelled(flag) }}",  # a macro reading a top-level set
+    "{{ tag(name)|upper ~ '#' }}",
+    "{% macro inner() %}i{% endmacro %}{{ inner() }}",
+    # constant includes lower in place
+    "[{% include 'filtered.j' %}]",
+    "{% for q in ['a', 'b'] %}{% include 'looped.j' %}{% endfor %}",
+    # the md5 global, over a column and over a ~ concat
+    "{{md5(name)}}",
+    "{{ md5(name ~ '-' ~ num) }}",
+    # Python floor division and modulo, negative operands and divisors
+    "{{num|int // 2}}",
+    "{{ (num|int - 20) // 3 }} {{ (num|int - 20) % 3 }} "
+    "{{ num|int // -3 }} {{ num|int % -3 }} "
+    "{{ (num|int - 20) // -7 }} {{ (num|int - 20) % -7 }}",
     # read by jinja2's own parser: nested blocks and block trim markers
     "{% if qty > 1 %}{% if flag == 'F' %}n{% endif %}{% endif %}",
     "{% if flag -%}x{% endif %}",
@@ -91,10 +127,20 @@ LOWERABLE = [
     "test: {{name}}",
 ]
 
-#: declared for every LOWERABLE case and used by none: full Jinja
-#: renders ``MACROS + template``, so defining it must not change a
-#: render nor keep ``template_column`` from lowering
-MACROS = "{% macro test() %}T{% endmacro %}"
+#: declared for every case: full Jinja renders ``MACROS + template``,
+#: so a case that calls none of them must render as without them
+MACROS = (
+    "{% macro test() %}T{% endmacro %}"
+    "{% macro tag(x, sep='-', end='.') %}<{{ x }}{{ sep }}{{ end }}>"
+    "{% endmacro %}"
+    "{% macro half(n) %}{{ n|int // 2 }}{% endmacro %}"
+    "{% macro both(a, b) %}{{ tag(a, sep=half(b)) }}{% endmacro %}"
+    "{% set label = 'L' %}"
+    "{% macro labelled(x) %}{{ label }}:{{ x }}{% endmacro %}"
+    "{% macro wrap() %}[{{ caller() }}]{% endmacro %}"
+    "{% macro many() %}{{ varargs|length }}{% endmacro %}"
+    "{% macro forever(n) %}{{ forever(n) }}{% endmacro %}"
+)
 
 NOT_LOWERABLE = [
     "{{unknown_filter|wat}}",
@@ -103,11 +149,15 @@ NOT_LOWERABLE = [
     "{{name[-1]}}",  # negative index
     "{{name[::2]}}",  # slice step
     "{% for x in items %}{{x}}{% endfor %}",
-    "{{md5(name)}}",
     "{{__row_data__}}",
     "{{num|int / qty|int}}",  # non-literal divisor: /0 raises in Python
     "{{num|int / 0}}",  # zero divisor: Python raises, Spark NULLs
-    "{{num|int // 2}}",  # floor division not modeled
+    "{{num|int // 0}}",
+    "{{num|int % qty|int}}",  # runtime divisor
+    "{{qty // 2}}",  # float floor division is not modeled
+    "{{num|int // 1.5}}",
+    "{{num|int // -1}}",  # -Long.MIN_VALUE overflows a long
+    "{{ md5(num|int) }}",  # a number's str() is not modeled
     "{{name + flag}}",  # '+' on strings concatenates in Python
     # r12 fidelity guards
     "{{name ~ 1 - 2}}",  # Jinja binds ~ tighter than +/- -> TypeError
@@ -115,30 +165,160 @@ NOT_LOWERABLE = [
     "{{qty|round(2)}}",  # fractional round: BigDecimal vs binary HALF_EVEN
     "{% if flag is odd %}x{% endif %}",  # unsupported is-test
     "{% if flag %}a{% else %}b{% else %}c{% endif %}",  # malformed
+    # macro calls Jinja renders differently or refuses
+    "{{ tag() }}",  # missing argument without a default
+    "{{ tag(name, '-', '.', 'x') }}",  # too many arguments
+    "{{ tag(name, nope=1) }}",  # unknown keyword
+    "{{ tag(name, x=1) }}",  # the same argument twice
+    "{{ wrap() }}",  # caller in the body
+    "{% call wrap() %}x{% endcall %}",
+    "{{ many() }}",  # varargs in the body
+    "{{ forever(1) }}",  # recursion
+    "{{ test }}",  # a bare macro name renders the macro object
+    "{{ tag(test) }}",
+    "{% for q in [1] %}{% macro m() %}{% endmacro %}{% endfor %}",
+    # includes the lowering does not model
+    "{% include name %}",  # dynamic name
+    "{% include 'filtered.j' ignore missing %}",
+    "{% include 'filtered.j' without context %}",
+    "{% include 'missing.j' %}",
+    # the enclosing loop object is not passed to an include
+    "{% for q in [1] %}{% include 'loop_index.j' %}{% endfor %}",
 ]
 
 
 @pytest.mark.parametrize("template", LOWERABLE)
-def test_lowered_matches_jinja(df, template):
-    lowered = lower_template(template, df.columns, schema=df.schema)
+def test_lowered_matches_jinja(df, includes, template):
+    lowered = lower_template(
+        template, df.columns, schema=df.schema, macros=MACROS,
+        loader_dir=includes,
+    )
     assert lowered is not None, f"expected lowerable: {template}"
     gated = template_column(
-        template, df.columns, macros=MACROS, schema=df.schema
+        template, df.columns, macros=MACROS, loader_dir=includes,
+        schema=df.schema,
     )
     gated_plan = df.select(gated)._jdf.queryExecution().executedPlan()
     assert "EvalPython" not in gated_plan.toString(), template
     rows = df.select(
         lowered.alias("native"),
         gated.alias("gated"),
-        jinja_udf_column(template, df.columns, macros=MACROS).alias("full"),
+        jinja_udf_column(
+            template, df.columns, macros=MACROS, loader_dir=includes
+        ).alias("full"),
     ).collect()
     for r in rows:
         assert r.native == r.gated == r.full, template
 
 
 @pytest.mark.parametrize("template", NOT_LOWERABLE)
-def test_not_lowerable_falls_back(df, template):
-    assert lower_template(template, df.columns, schema=df.schema) is None
+def test_not_lowerable_falls_back(df, includes, template):
+    assert lower_template(
+        template, df.columns, schema=df.schema, macros=MACROS,
+        loader_dir=includes,
+    ) is None
+
+
+def test_macro_whitespace_renders_every_row(df):
+    """Full Jinja renders ``macros + template``, so whitespace or stray
+    text around the macro definitions prints before every row; the
+    lowered render prints it too."""
+    defs = "{% macro test() %}T{% endmacro %}"
+    for macros, prefix in [
+        (defs + "\n  ", "\n  "),
+        (defs + "stray text", "stray text"),
+        ("\n" + defs + "\n", "\n\n"),
+    ]:
+        lowered = lower_template("{{name}}", df.columns, macros=macros)
+        assert lowered is not None, macros
+        rows = df.select(
+            lowered.alias("native"),
+            jinja_udf_column("{{name}}", df.columns, macros=macros).alias(
+                "full"
+            ),
+        ).collect()
+        assert [r.native for r in rows] == [r.full for r in rows], macros
+        assert rows[0].native == prefix + "alpha", macros
+
+
+def test_macro_scope_hides_the_callers_loop_variable(spark):
+    """Jinja resolves a macro body's free names at the template's top
+    level: a caller's loop variable is invisible, and a top-level set
+    made after the definition is seen."""
+    df = spark.createDataFrame([("ctx",)], ["x"])
+    for macros, template, want in [
+        ("{% macro m() %}{{x}}{% endmacro %}",
+         "{% for x in [7] %}{{ m() }}{% endfor %}", "ctx"),
+        ("{% macro m() %}{{g}}{% endmacro %}{% set g = 5 %}",
+         "{{ m() }}{% set g = 6 %}{{ m() }}", "56"),
+    ]:
+        lowered = lower_template(template, df.columns, macros=macros)
+        assert lowered is not None, template
+        row = df.select(
+            lowered.alias("native"),
+            jinja_udf_column(template, df.columns, macros=macros).alias(
+                "full"
+            ),
+        ).collect()[0]
+        assert row.native == row.full == want, template
+
+
+def test_include_needs_a_loader(df, includes):
+    """Without a loader (add_columns has none) the full engine cannot
+    resolve an include either, so the lowering declines."""
+    t = "{% include 'filtered.j' %}"
+    assert lower_template(t, df.columns) is None
+    assert lower_template(t, df.columns, loader_dir=includes) is not None
+
+
+def test_md5_shadowed_by_a_column_declines(spark):
+    """A context variable named ``md5`` hides the global."""
+    df = spark.createDataFrame([("a", "b")], ["md5", "name"])
+    assert lower_template("{{ md5(name) }}", df.columns) is None
+
+
+def test_md5_of_null_hashes_none(spark):
+    """The global is ``hashlib.md5(str(x).encode())``: NULL is 'None'."""
+    df = spark.createDataFrame([("a",), (None,)], "name string")
+    lowered = lower_template("{{ md5(name) }}", df.columns, schema=df.schema)
+    assert lowered is not None
+    rows = df.select(
+        lowered.alias("native"),
+        jinja_udf_column("{{ md5(name) }}", df.columns).alias("full"),
+    ).collect()
+    assert [r.native for r in rows] == [r.full for r in rows]
+
+
+def test_floor_div_mod_exact_on_long_edges(spark):
+    """``//`` and ``%`` stay in long arithmetic: operands beyond 2**53
+    and Long.MIN_VALUE floor exactly like Python."""
+    edges = [-(2**63), -(2**53) - 1, -7, -1, 0, 1, 7, 2**53 + 1, 2**63 - 1]
+    df = spark.createDataFrame([(v,) for v in edges], "n long")
+    for d in (2, 3, -2, -7, 10**18, -(10**18)):
+        for op in ("//", "%"):
+            t = "{{ n %s %d }}" % (op, d)
+            lowered = lower_template(t, df.columns, schema=df.schema)
+            assert lowered is not None, t
+            got = [r.v for r in df.select(lowered.alias("v")).collect()]
+            want = [str(v // d if op == "//" else v % d) for v in edges]
+            assert got == want, t
+
+
+class _BrokenSchema:
+    """A schema whose lookup fails with an unexpected error."""
+
+    def __getitem__(self, name):
+        raise RuntimeError("schema lookup failed")
+
+
+def test_schema_lookup_errors_propagate():
+    """Only a missing name (KeyError) is a decision on the lowering
+    path; any other schema error propagates instead of silently
+    picking a kind."""
+    with pytest.raises(RuntimeError, match="schema lookup failed"):
+        lower_template("{{name}}", ["name"], schema=_BrokenSchema())
+    with pytest.raises(RuntimeError, match="schema lookup failed"):
+        lower_template("{{w.a}}", ["w"], schema=_BrokenSchema())
 
 
 def test_block_scalar_template_in_yaml(spark, tmp_path):
@@ -194,10 +374,22 @@ def test_value_col_in_modify_context(df):
 
 
 def test_macros_force_fallback(df):
-    macros = "{% macro shout(x) %}{{x|upper}}!{% endmacro %}"
-    col = template_column("{{shout(name)}}", df.columns, macros=macros)
-    out = [r.v for r in df.select(col.alias("v")).collect()]
-    assert out == ["ALPHA!", "BETA MAX!"]
+    """A macro call lowers in place; a macro the lowering declines
+    (``caller`` in its body) still renders through the UDF."""
+    macros = (
+        "{% macro shout(x) %}{{x|upper}}!{% endmacro %}"
+        "{% macro wrap(x) %}{{ caller() }}{{x}}{% endmacro %}"
+    )
+    for template, want, python in [
+        ("{{shout(name)}}", ["ALPHA!", "BETA MAX!"], False),
+        ("{% call wrap(name) %}>{% endcall %}", [">alpha", ">Beta Max"],
+         True),
+    ]:
+        col = template_column(template, df.columns, macros=macros)
+        out = df.select(col.alias("v"))
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert ("EvalPython" in plan) == python, template
+        assert [r.v for r in out.collect()] == want, template
 
 
 def test_row_data_dict(df):
@@ -750,3 +942,103 @@ class TestFirstLast:
         t = "{% for k in __row_data__ %}{{loop}}{% endfor %}"
         df = spark.createDataFrame([("a",)], ["c"])
         assert lower_template(t, df.columns, schema=df.schema) is None
+
+
+def test_project_with_macro_md5_include_runs_native(
+    spark, tmp_path, monkeypatch
+):
+    """A project whose templates call a macro with ``//``, the ``md5``
+    global and an include runs without the Jinja UDF, and its output
+    equals a plain-``jinja2`` render of the input."""
+    import hashlib
+    import re
+
+    import jinja2
+
+    from earthmover_spark.functions import jinja_compute
+    from earthmover_spark.plans.executor import explain_project, run_project
+
+    rows = [
+        {"student": "s1", "event": "e1", "minutes": "-31"},
+        {"student": "s2", "event": "e2", "minutes": "7"},
+        {"student": "s3", "event": "e3", "minutes": "45"},
+    ]
+    (tmp_path / "events.csv").write_text(
+        "student,event,minutes\n"
+        + "".join(",".join(r.values()) + "\n" for r in rows)
+    )
+    (tmp_path / "status.jsont").write_text('"minutes": {{ minutes|int }}\n')
+    row_src = (
+        '{"student": "{{ student }}", "hash": "{{ md5(student ~ event) }}",\n'
+        ' {% include "status.jsont" %}, "bucket": {{ bucket }}}\n'
+    )
+    (tmp_path / "row.jsont").write_text(row_src)
+    macros = "{% macro to_bucket(m) %}{{ (m|int) // 15 }}{% endmacro %}"
+    add = "{{ to_bucket(minutes) }}"
+    (tmp_path / "earthmover.yaml").write_text(textwrap.dedent("""
+        config:
+          output_dir: ./out
+          macros: >-
+            {%%raw%%}%s{%%endraw%%}
+        sources:
+          events:
+            file: events.csv
+        transformations:
+          bucketed:
+            source: $sources.events
+            operations:
+              - operation: add_columns
+                columns:
+                  bucket: "{%%raw%%}%s{%%endraw%%}"
+        destinations:
+          rows:
+            source: $transformations.bucketed
+            template: ./row.jsont
+            extension: jsonl
+    """) % (macros, add))
+    config = str(tmp_path / "earthmover.yaml")
+
+    for name, plan in explain_project(spark, config).items():
+        assert "EvalPython" not in plan, name
+
+    def no_udf(*args, **kwargs):
+        raise AssertionError("a template fell back to the Jinja UDF")
+
+    monkeypatch.setattr(jinja_compute, "jinja_udf_column", no_udf)
+    monkeypatch.setattr(jinja_compute, "jinja_udf_struct", no_udf)
+    results = run_project(spark, config)
+    with open(results["$destinations.rows"]) as fh:
+        got = sorted(fh.read().splitlines())
+
+    # plain jinja2 with the reference's md5 global; destinations
+    # linearize the template source (reference destination.py:94-96)
+    env = jinja2.Environment(loader=jinja2.FileSystemLoader(str(tmp_path)))
+    env.globals["md5"] = lambda x: hashlib.md5(str(x).encode()).hexdigest()
+    row_template = env.from_string(macros + re.sub(r"\s+", " ", row_src))
+    want = []
+    for row in rows:
+        row = dict(row)
+        row["bucket"] = env.from_string(macros + add).render(
+            **row, __row_data__=dict(row)
+        )
+        want.append(row_template.render(**row, __row_data__=row))
+    assert got == sorted(want)
+    assert '"bucket": -3}' in got[0]
+
+
+def test_upper_lower_match_python_beyond_ascii(spark):
+    """|upper and |lower map ASCII strings themselves and hand any other
+    string to Spark's full case mapping; both match Python's."""
+    df = spark.createDataFrame(
+        [("straße",), ("İstanbul",), ("ǅ",), ("ﬁ",), ("MiXeD 9!",), ("",),
+         ("ÀÉÎ",), ("ᾳ",), ("plain ascii",)],
+        ["s"],
+    )
+    for t in ("{{s|upper}}", "{{s|lower}}", "{{s|lower|upper}}"):
+        lowered = lower_template(t, df.columns)
+        assert lowered is not None, t
+        rows = df.select(
+            lowered.alias("native"),
+            jinja_udf_column(t, df.columns).alias("full"),
+        ).collect()
+        assert [r.native for r in rows] == [r.full for r in rows], t

@@ -9,10 +9,10 @@ EXACTLY which templates lower and which fall back — a regression in
 either direction (a lowered template regressing to Python, or a
 fallback silently changing semantics by lowering) fails loudly.
 
-Also unit-pins ``macros_allow_lowering``: the r11 gate fix that stops
-a merely-DECLARED project macro (the reference suite defines test/
-test2 but never calls them row-side) from forcing every template in
-the project onto the UDF path.
+Also pins that project macros lower with the template: a
+merely-declared macro (the reference suite defines test/test2 but never
+calls them row-side) keeps every template native, a called one lowers
+in place, and text around the definitions renders like full Jinja.
 """
 
 import os
@@ -120,9 +120,9 @@ def test_golden_suite_lowering_manifest(spark, tmp_path):
     orig_udf_struct = jc.jinja_udf_struct
 
     def spy_lower(template, columns, value_col=None, schema=None,
-                  self_row_data=False):
+                  self_row_data=False, **kw):
         out = orig_lower(template, columns, value_col, schema,
-                         self_row_data)
+                         self_row_data, **kw)
         (lowered if out is not None else fell_back).add(template)
         return out
 
@@ -253,36 +253,53 @@ def test_golden_floor_lowers_without_reference(spark):
             assert r[f"l{i}"] == r[f"f{i}"], t
 
 
-def test_macros_allow_lowering_gate():
+def test_macros_render_parity(spark):
+    """Each (template, macros) pair lowers and renders byte-equal to the
+    full engine: declared-but-uncalled macros, called macros, names
+    that only contain a macro name, and top-level sets, text, comments
+    and whitespace around the definitions (they print on every row)."""
     from earthmover_spark.functions.jinja_compute import (
-        macros_allow_lowering,
+        jinja_udf_column,
+        lower_template,
     )
 
     defs = (
         "{% macro test() -%}testing!{%- endmacro -%}"
         "{% macro test2() -%}testing!{%- endmacro %}"
     )
-    # declared-but-uncalled macros must NOT block lowering
-    assert macros_allow_lowering("{{value|trim}}", defs)
-    assert macros_allow_lowering("plain", defs)
-    # a template actually CALLING a defined macro must fall back
-    assert not macros_allow_lowering("{{test()}}", defs)
-    assert not macros_allow_lowering("x {{ test2( ) }} y", defs)
-    # a name that merely contains a macro name as a substring is fine
-    assert macros_allow_lowering("{{test2x}}", defs)
-    # top-level effects outside macro defs block everything
-    assert not macros_allow_lowering("{{v}}", "{% set x = 1 %}")
-    assert not macros_allow_lowering("{{v}}", defs + "stray text")
-    # comments and whitespace around defs are harmless
-    assert macros_allow_lowering("{{v}}", "{# note #}\n" + defs + "\n")
-    # empty macros always allow
-    assert macros_allow_lowering("{{v}}", "")
+    cases = [
+        ("{{value|trim}}", defs),
+        ("plain", defs),
+        ("{{test()}}", defs),
+        ("x {{ test2( ) }} y", defs),
+        ("{{test2x}}", defs),
+        ("{{v}}", "{% set x = 1 %}"),
+        ("{{v}}", defs + "stray text"),
+        ("{{v}}", "{# note #}\n" + defs + "\n"),
+        ("{{v}}", ""),
+    ]
+    df = spark.createDataFrame(
+        [(" a ", "b", "c"), ("", "", "")], ["v", "test2x", "name"]
+    )
+    lowered, full = [], []
+    for i, (t, macros) in enumerate(cases):
+        vcol = "v" if "value" in t else None
+        low = lower_template(t, df.columns, vcol, macros=macros)
+        assert low is not None, (t, macros)
+        lowered.append(low.alias(f"l{i}"))
+        full.append(
+            jinja_udf_column(t, df.columns, vcol, macros=macros).alias(f"f{i}")
+        )
+    for r in df.select(*lowered, *full).collect():
+        for i, case in enumerate(cases):
+            assert r[f"l{i}"] == r[f"f{i}"], case
 
 
 def test_declared_macros_no_longer_force_udf(spark):
-    """End-to-end: add_columns under a project with declared-but-unused
-    macros must plan ZERO Python stages (the r11 gate fix), and a
-    macro-CALLING template still renders via the UDF."""
+    """End-to-end: add_columns under a project with declared macros
+    plans ZERO Python stages, whether the template calls a macro or
+    not; a macro the lowering declines (``caller`` in its body) still
+    renders via the UDF."""
     from earthmover_spark.operators.column import add_columns
 
     df = spark.createDataFrame([("a",), ("b",)], ["name"])
@@ -297,6 +314,19 @@ def test_declared_macros_no_longer_force_udf(spark):
     called = add_columns(
         df, columns={"tag": "{{hello()}}_{{name}}"}, macros=macros
     )
+    plan = called._jdf.queryExecution().executedPlan().toString()
+    assert "EvalPython" not in plan, plan
     assert [r.tag for r in called.orderBy("name").collect()] == [
         "hi_a", "hi_b",
+    ]
+
+    declined = add_columns(
+        df,
+        columns={"tag": "{% call wrap() %}{{name}}{% endcall %}"},
+        macros=macros + "{% macro wrap() %}<{{ caller() }}>{% endmacro %}",
+    )
+    plan = declined._jdf.queryExecution().executedPlan().toString()
+    assert "EvalPython" in plan, plan
+    assert [r.tag for r in declined.orderBy("name").collect()] == [
+        "<a>", "<b>",
     ]

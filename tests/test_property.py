@@ -151,13 +151,21 @@ def test_snake_case_examples(raw, expected):
 
 _lit_text = st.sampled_from(["", " ", "x=", "id: ", "-", " / "])
 _col = st.sampled_from(["name", "qty"])
+#: project macros the fuzzed templates may call; both paths render
+#: ``_FUZZ_MACROS + template``
+_FUZZ_MACROS = (
+    "{% macro tag(x, sep=':') %}<{{ x }}{{ sep }}>{% endmacro %}"
+    "{% macro half(n) %}{{ n|int // 2 }}{% endmacro %}"
+)
+_divisor = st.integers(-7, 7).filter(lambda d: d not in (0, -1))
 
 
 @st.composite
 def templates(draw):
     def expr():
         kind = draw(st.sampled_from(
-            ["col", "filter", "slice", "arith", "replace", "concat"]))
+            ["col", "filter", "slice", "arith", "replace", "concat",
+             "macro", "md5", "floor"]))
         c = draw(_col)
         if kind == "col":
             return "{{%s}}" % c
@@ -171,6 +179,19 @@ def templates(draw):
                                           draw(st.integers(0, 9)))
         if kind == "replace":
             return "{{%s|replace('a', '%s')}}" % (c, draw(st.sampled_from(["o", ""])))
+        if kind == "macro":
+            return draw(st.sampled_from([
+                "{{tag(%s)}}" % c, "{{tag(%s, sep='-')}}" % c,
+                "{{half(qty)}}", "{{tag(half(qty), sep=name)}}",
+            ]))
+        if kind == "md5":
+            return draw(st.sampled_from(
+                ["{{md5(%s)}}" % c, "{{md5(name ~ qty)}}"]))
+        if kind == "floor":
+            # negative operands too: qty spans 0..42
+            return "{{(qty|int - %d) %s %d}}" % (
+                draw(st.integers(0, 50)), draw(st.sampled_from(["//", "%"])),
+                draw(_divisor))
         return "{{name ~ ':' ~ qty}}"
 
     def piece():
@@ -205,11 +226,12 @@ def test_lowered_jinja_matches_full_engine(spark, template):
          ("\tfoo-bar ", "9"), (" mixed　CASE\n", "03")],
         ["name", "qty"],
     )
-    lowered = lower_template(template, df.columns)
+    lowered = lower_template(template, df.columns, macros=_FUZZ_MACROS)
     if lowered is None:
         return  # fallback path; parity covered by dedicated tests
     rows = df.select(
-        lowered.alias("low"), jinja_udf_column(template, df.columns).alias("full")
+        lowered.alias("low"),
+        jinja_udf_column(template, df.columns, macros=_FUZZ_MACROS).alias("full"),
     ).collect()
     for r in rows:
         assert r.low == r.full, template

@@ -177,3 +177,27 @@ def test_file_stats_multipart(spark, tmp_path):
     assert sorted(r.file for r in many) == [
         f"part-{i:04d}.parquet" for i in range(4)
     ]
+
+
+def test_single_file_size_probe_errors_propagate(spark, tmp_path, monkeypatch):
+    """Only a frame without ``_jdf`` (Spark Connect: AttributeError)
+    skips the single-file size warning; any other error from the size
+    probe propagates instead of silently disabling the warning."""
+    from earthmover_spark.destinations import file_destination as fd
+
+    df = spark.createDataFrame([("a",)], "k string")
+
+    def no_jdf(_df):
+        raise AttributeError("_jdf")
+
+    monkeypatch.setattr(fd, "estimated_plan_bytes", no_jdf)
+    path = fd.write_destination(df, "connect", str(tmp_path / "o1"))
+    with open(path) as fh:
+        assert fh.read().splitlines() == ['{"k":"a"}']
+
+    def broken(_df):
+        raise RuntimeError("size probe failed")
+
+    monkeypatch.setattr(fd, "estimated_plan_bytes", broken)
+    with pytest.raises(RuntimeError, match="size probe failed"):
+        fd.write_destination(df, "broken", str(tmp_path / "o2"))
