@@ -75,6 +75,41 @@ def render_lines(
     return casted.select(line.alias("line"))
 
 
+def _template_source(
+    template: str | None, template_file: str | None, loader_dir
+) -> tuple[str | None, object]:
+    """The template text and ``{% include %}`` search path a text
+    destination renders with: a ``template_file`` is read, and its own
+    directory follows ``loader_dir`` (the reference resolves includes
+    relative to the config file, destination.py:74; template-relative
+    includes come second)."""
+    if template_file is None:
+        return template, loader_dir
+    tdir = os.path.dirname(os.path.abspath(template_file))
+    search = [loader_dir] if isinstance(loader_dir, str) else list(loader_dir or [])
+    if tdir not in search:
+        search.append(tdir)
+    with open(template_file) as fh:
+        return fh.read(), search
+
+
+def destination_lines(
+    df: DataFrame,
+    *,
+    template: str | None = None,
+    template_file: str | None = None,
+    macros: str = "",
+    loader_dir=None,
+    linearize: bool = True,
+) -> DataFrame:
+    """The 'line' frame ``write_destination`` writes for these
+    arguments (``explain_project`` plans it without writing)."""
+    template, loader_dir = _template_source(template, template_file, loader_dir)
+    return render_lines(
+        df, template, macros=macros, loader_dir=loader_dir, linearize=linearize
+    )
+
+
 def estimated_plan_bytes(df: DataFrame) -> int:
     """Catalyst's size estimate for the optimized plan (bytes). Driver
     -side metadata only — nothing executes. Upper-bound-ish for scans
@@ -147,20 +182,7 @@ def write_destination(
     ``mode='directory'``: ``df.write.text`` part files — the scalable
     default for big outputs.
     """
-    if template_file is not None:
-        # {% include %} search path: config dir first (reference
-        # destination.py:74 resolves relative to the config file), then
-        # the template's own directory (template-relative includes)
-        tdir = os.path.dirname(os.path.abspath(template_file))
-        search = (
-            [loader_dir] if isinstance(loader_dir, str)
-            else list(loader_dir or [])
-        )
-        if tdir not in search:
-            search.append(tdir)
-        loader_dir = search
-        with open(template_file) as fh:
-            template = fh.read()
+    template, loader_dir = _template_source(template, template_file, loader_dir)
     lines = render_lines(
         df, template, macros=macros, loader_dir=loader_dir, linearize=linearize
     )

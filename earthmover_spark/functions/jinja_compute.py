@@ -1465,17 +1465,19 @@ def template_column(
     loader_dir: str | None = None,
     self_row_data: bool = False,
     schema=None,
-) -> Column:
+    udf: bool = True,
+) -> Column | None:
     """Compile a Jinja template to a Column: native when
     ``lower_template`` lowers ``macros + template`` (macro calls and
-    constant includes lower in place), else the pandas_udf renderer.
-    Pass the frame ``schema`` to enable typed and dotted nested-struct
-    lowering."""
+    constant includes lower in place), else the pandas_udf renderer —
+    or None with ``udf=False``, for callers that batch the templates
+    that need the UDF. Pass the frame ``schema`` to enable typed and
+    dotted nested-struct lowering."""
     lowered = lower_template(
         template, columns, value_col, schema, self_row_data,
         macros=macros, loader_dir=loader_dir,
     )
-    if lowered is not None:
+    if lowered is not None or not udf:
         return lowered
     return jinja_udf_column(
         template, columns, value_col, macros, loader_dir, self_row_data

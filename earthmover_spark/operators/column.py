@@ -29,16 +29,6 @@ def _is_template(value) -> bool:
     return isinstance(value, str) and ("{{" in value or "{%" in value)
 
 
-def _needs_jinja_udf(value: str, columns: list[str], value_col: str | None,
-                     macros: str, schema=None) -> bool:
-    """True when `template_column` would fall back to the pandas UDF."""
-    from earthmover_spark.functions.jinja_compute import lower_template
-
-    return lower_template(
-        value, columns, value_col, schema, macros=macros
-    ) is None
-
-
 def _flush_jinja_batch(out: DataFrame, pending: list, macros: str) -> DataFrame:
     """Apply accumulated UDF-bound templates as ONE multi-output pandas
     UDF (single JVM→Python crossing; chained per-column UDFs nest each
@@ -75,17 +65,15 @@ def add_columns(
     for name, value in columns.items():
         if _is_template(value):
             tmpl = str(value)
-            if _needs_jinja_udf(tmpl, out.columns, None, macros, out.schema):
+            lowered = template_column(
+                tmpl, out.columns, macros=macros, schema=out.schema, udf=False
+            )
+            if lowered is None:
                 pending.append((name, tmpl, None))
                 continue
             out = _flush_jinja_batch(out, pending, macros)
             pending = []
-            out = out.withColumn(
-                name,
-                template_column(
-                    tmpl, out.columns, macros=macros, schema=out.schema
-                ),
-            )
+            out = out.withColumn(name, lowered)
         else:
             out = _flush_jinja_batch(out, pending, macros)
             pending = []
@@ -108,20 +96,16 @@ def modify_columns(
         for name in expand_column_specs([spec], out.columns):
             if _is_template(value):
                 tmpl = str(value)
-                if _needs_jinja_udf(
-                    tmpl, out.columns, name, macros, out.schema
-                ):
+                lowered = template_column(
+                    tmpl, out.columns, value_col=name, macros=macros,
+                    schema=out.schema, udf=False,
+                )
+                if lowered is None:
                     pending.append((name, tmpl, name))
                     continue
                 out = _flush_jinja_batch(out, pending, macros)
                 pending = []
-                out = out.withColumn(
-                    name,
-                    template_column(
-                        tmpl, out.columns, value_col=name, macros=macros,
-                        schema=out.schema,
-                    ),
-                )
+                out = out.withColumn(name, lowered)
             else:
                 out = _flush_jinja_batch(out, pending, macros)
                 pending = []

@@ -9,7 +9,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from earthmover_spark.operators.row import ROW_ORDER
-from earthmover_spark.util import EarthmoverSparkError, ensure_list, string_view
+from earthmover_spark.util import (
+    EarthmoverSparkError,
+    deferred_error,
+    ensure_list,
+    string_view,
+)
 
 JOIN_TYPES = {"inner": "inner", "left": "left", "right": "right", "outer": "full_outer"}
 
@@ -168,13 +173,19 @@ def pivot(
     """Long -> wide; requires (rows_by x cols_by) uniqueness — this is a
     reshape, not an aggregation (reference earthmover/operations/dataframe.py:306-411).
 
-    The uniqueness assertion reproduces the reference's
-    total-vs-unique-count error message. Spark pivots on a multi-column
-    groupBy natively, so no composite-key workaround is needed. The
-    ``F.first`` agg mirrors the reference's redundant ``aggfunc='first'``.
-    Passing ``distinct_values`` (the expected output column names) skips
-    Spark's extra distinct-scan job over ``cols_by`` — worthwhile when
-    the input is 100 TB and the pivot columns are known."""
+    The uniqueness check is part of the plan, not a job at build time:
+    the input is pre-aggregated on (rows_by, cols_by) with
+    ``first(values)`` and a row count, and a filter on that count raises
+    when a combination repeats. The filter sees every combination, also
+    those outside ``distinct_values``. The reference's total-vs-unique
+    message is computed only when the check fails, by the
+    ``util.deferred_errors`` scope around the action. Spark pivots on a
+    multi-column groupBy natively, so no composite-key workaround is
+    needed. The ``F.first`` agg mirrors the reference's redundant
+    ``aggfunc='first'``. Passing ``distinct_values`` (the expected output
+    column names) skips Spark's extra distinct-scan job over ``cols_by``
+    — without it that scan is a job at build time, and it runs the
+    check."""
     rows = ensure_list(rows_by)
     required = set(rows) | {cols_by, values}
     missing = required - set(df.columns)
@@ -182,22 +193,33 @@ def pivot(
         raise EarthmoverSparkError(f"pivot: columns not in dataset: {missing}")
 
     key_cols = rows + [cols_by]
-    counts = df.groupBy(*key_cols).count().filter(F.col("count") > 1)
-    if counts.limit(1).count() > 0:
+
+    def _message() -> str:
         total = df.count()
         uniq = df.select(*key_cols).distinct().count()
-        raise EarthmoverSparkError(
+        return (
             "pivot operation requires unique combinations of index and columns. "
             f"Found {total} rows but only {uniq} unique combinations. "
             "Consider using group_by to aggregate the data instead."
         )
-    grouped = df.groupBy(*rows) if rows else df.groupBy()
+
+    v, n = "__pivot_value__", "__pivot_rows__"
+    duplicate = deferred_error(
+        "pivot: duplicate (rows_by, cols_by) combination", _message
+    )
+    unique = (
+        df.groupBy(*key_cols)
+        .agg(F.first(values).alias(v), F.count(F.lit(1)).alias(n))
+        .filter(F.when(F.col(n) > 1, duplicate).otherwise(F.lit(True)))
+        .drop(n)
+    )
+    grouped = unique.groupBy(*rows) if rows else unique.groupBy()
     pivoted = (
         grouped.pivot(cols_by, list(distinct_values))
         if distinct_values
         else grouped.pivot(cols_by)
     )
-    return pivoted.agg(F.first(values))
+    return pivoted.agg(F.first(v))
 
 
 def debug(

@@ -5,7 +5,21 @@ Improvements over the reference noted in SURVEY.md §4:
 - a node feeding multiple downstream consumers is ``.persist()``ed
   (the reference recomputes it per destination) and unpersisted when
   the run ends, failed or not;
-- everything stays lazy until a destination writes.
+- building the DAG submits no Spark job: jobs run inside a
+  destination's job group, and data checks such as pivot's uniqueness
+  rule run inside the plan that writes (``util.deferred_errors``).
+  The named build-time exceptions are:
+  - ``require_rows``, ``expect`` and ``debug``, eager as in the
+    reference (node.py:135,157,186);
+  - ``pivot`` without ``distinct_values`` (Spark scans ``cols_by`` for
+    the output columns);
+  - operators that need a value from the data to build their plan:
+    iterative fits and fixpoints (graph operators, ``bradley_terry``,
+    ``train_logreg``, ``resolve_duplicates``), data-derived splits and
+    counts (group_by, z-order and set-similarity operators,
+    ``infer_types``) and ``checkpoint_cut``'s fallback;
+  - Spark's schema inference when a parquet source is read.
+  ``results_file`` row counts run after the writes.
 """
 
 from __future__ import annotations
@@ -25,9 +39,12 @@ from earthmover_spark.plans.config import (
 )
 from earthmover_spark.plans.graph import NODE_REF, Graph, map_refs
 from earthmover_spark.sources import read_source
-from earthmover_spark.util import EarthmoverSparkError
+from earthmover_spark.util import EarthmoverSparkError, deferred_errors
 
 from pyspark.sql import functions as F
+
+#: destination formats written as part files, not rendered lines
+COLUMNAR = ("parquet", "orc", "csv")
 
 
 class Executor:
@@ -185,48 +202,51 @@ class Executor:
         t_start = time.time()
         persisted: list[DataFrame] = []
         try:
-            for name in order:
-                t0 = time.time()
-                node = self.graph.nodes[name]
-                if node.kind == "sources":
-                    df = self._eval_source(name, node.config)
-                elif node.kind == "transformations":
-                    df = self._eval_transformation(name, node.config)
-                else:
-                    self._write_destination(name, node.config, out_dir)
+            # a failed in-plan check (pivot) is reported with its own
+            # message, whether it fails while a node is built or written
+            with deferred_errors():
+                for name in order:
+                    t0 = time.time()
+                    node = self.graph.nodes[name]
+                    if node.kind == "sources":
+                        df = self._eval_source(name, node.config)
+                    elif node.kind == "transformations":
+                        df = self._eval_transformation(name, node.config)
+                    else:
+                        self._write_destination(name, node.config, out_dir)
+                        node_stats[name] = {"seconds": round(time.time() - t0, 3)}
+                        if self._show_progress(node.config):
+                            print(f"-- {name}: written in {node_stats[name]['seconds']}s")
+                        continue
+                    if not df.isStreaming:
+                        self._check_expectations(name, node.config, df)
+                        if node.config.get("debug"):
+                            print(f"-- {name}: {len(df.columns)} columns {df.columns}")
+                            df.show(5, truncate=False)
+                        if node.config.get("repartition"):
+                            df = df.repartition(int(node.config["repartition"]))
+                        if consumers.get(name, 0) > 1:
+                            df = df.persist()
+                            persisted.append(df)
+                    self.data[name] = df
                     node_stats[name] = {"seconds": round(time.time() - t0, 3)}
-                    if self._show_progress(node.config):
-                        print(f"-- {name}: written in {node_stats[name]['seconds']}s")
-                    continue
-                if not df.isStreaming:
-                    self._check_expectations(name, node.config, df)
-                    if node.config.get("debug"):
-                        print(f"-- {name}: {len(df.columns)} columns {df.columns}")
-                        df.show(5, truncate=False)
-                    if node.config.get("repartition"):
-                        df = df.repartition(int(node.config["repartition"]))
-                    if consumers.get(name, 0) > 1:
-                        df = df.persist()
-                        persisted.append(df)
-                self.data[name] = df
-                node_stats[name] = {"seconds": round(time.time() - t0, 3)}
 
-            if results_file:
-                # row counts force one count per node — opt-in, like the
-                # reference's --results-file (earthmover.py:409-419)
-                for name, df in self.data.items():
-                    if name in node_stats and not df.isStreaming:
-                        node_stats[name]["rows"] = df.count()
-                with open(results_file, "w") as fh:
-                    json.dump(
-                        {
-                            "total_seconds": round(time.time() - t_start, 3),
-                            "nodes": node_stats,
-                            "destinations": self.results,
-                        },
-                        fh,
-                        indent=2,
-                    )
+                if results_file:
+                    # row counts force one count per node — opt-in, like the
+                    # reference's --results-file (earthmover.py:409-419)
+                    for name, df in self.data.items():
+                        if name in node_stats and not df.isStreaming:
+                            node_stats[name]["rows"] = df.count()
+                    with open(results_file, "w") as fh:
+                        json.dump(
+                            {
+                                "total_seconds": round(time.time() - t_start, 3),
+                                "nodes": node_stats,
+                                "destinations": self.results,
+                            },
+                            fh,
+                            indent=2,
+                        )
         finally:
             # fan-out caches are only shared within this run
             for df in persisted:
@@ -266,7 +286,7 @@ class Executor:
         short = name.split(".", 1)[1]
         fmt = cfg.get("format")
         checkpoint = os.path.join(out_dir, ".checkpoints", short)
-        if fmt in ("parquet", "orc", "csv"):
+        if fmt in COLUMNAR:
             out_path = os.path.join(out_dir, f"{short}.{fmt}.d")
         else:
             template_file = cfg.get("template")
@@ -334,7 +354,7 @@ class Executor:
         if df.isStreaming:
             self.results[name] = self._write_streaming(name, cfg, df, out_dir)
             return
-        if cfg.get("format") in ("parquet", "orc", "csv"):
+        if cfg.get("format") in COLUMNAR:
             from earthmover_spark.destinations.file_destination import write_columnar
 
             self.results[name] = write_columnar(
@@ -347,24 +367,31 @@ class Executor:
                 target_file_mb=cfg.get("target_file_mb"),
             )
             return
-        template_file = cfg.get("template")
-        if template_file:
-            template_file = resolve_path(template_file, self.project.base_dir)
         short = name.split(".", 1)[1]
         path = write_destination(
             df,
             short,
             out_dir,
-            template_file=template_file,
             extension=cfg.get("extension", "jsonl"),
-            macros=self.project.macros,
-            loader_dir=self.project.base_dir,
-            linearize=cfg.get("linearize", True),
             header=cfg.get("header"),
             footer=cfg.get("footer"),
             mode=cfg.get("mode", "file"),
+            **self._render_args(cfg),
         )
         self.results[name] = path
+
+    def _render_args(self, cfg: dict) -> dict:
+        """How a text (template or JSON) destination renders its lines."""
+        template_file = cfg.get("template")
+        return {
+            "template_file": (
+                resolve_path(template_file, self.project.base_dir)
+                if template_file else None
+            ),
+            "macros": self.project.macros,
+            "loader_dir": self.project.base_dir,
+            "linearize": cfg.get("linearize", True),
+        }
 
 
 def explain_project(
@@ -377,9 +404,13 @@ def explain_project(
     """Compile a YAML project and return {destination: physical plan}
     WITHOUT writing anything — the plan-inspection surface for tuning:
     check that filters pushed down, joins broadcast, and nothing fell
-    back to a Python UDF before paying for a full run. Streaming
-    destinations fall back to the analyzed logical plan (their physical
-    plan exists only once a query starts)."""
+    back to a Python UDF before paying for a full run. A batch text
+    destination shows the plan of the lines it writes (its template
+    rendered the way ``write_destination`` renders it); columnar and
+    streaming destinations show their source frame. A frame Spark cannot
+    plan yet falls back to its analyzed logical plan."""
+    from earthmover_spark.destinations.file_destination import destination_lines
+
     project = compile_config(config_path, params)
     ex = Executor(spark, project)
     subset = ex.graph.select(selector)
@@ -387,18 +418,21 @@ def explain_project(
     jvm_mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         mode
     )
-    for name in ex.graph.topological_order(subset):
-        node = ex.graph.nodes[name]
-        if node.kind == "sources":
-            ex.data[name] = ex._eval_source(name, node.config)
-        elif node.kind == "transformations":
-            ex.data[name] = ex._eval_transformation(name, node.config)
-        else:
-            df = ex._resolve(node.config["source"])
-            try:
-                plans[name] = df._jdf.queryExecution().explainString(jvm_mode)
-            except Exception:
-                plans[name] = df._jdf.queryExecution().analyzed().toString()
+    with deferred_errors():
+        for name in ex.graph.topological_order(subset):
+            node = ex.graph.nodes[name]
+            if node.kind == "sources":
+                ex.data[name] = ex._eval_source(name, node.config)
+            elif node.kind == "transformations":
+                ex.data[name] = ex._eval_transformation(name, node.config)
+            else:
+                df = ex._resolve(node.config["source"])
+                if not df.isStreaming and node.config.get("format") not in COLUMNAR:
+                    df = destination_lines(df, **ex._render_args(node.config))
+                try:
+                    plans[name] = df._jdf.queryExecution().explainString(jvm_mode)
+                except Exception:
+                    plans[name] = df._jdf.queryExecution().analyzed().toString()
     return plans
 
 

@@ -8,10 +8,12 @@ name; specs without wildcard chars must (optionally) match exactly.
 
 from __future__ import annotations
 
+import contextlib
 import fnmatch
+import itertools
 import logging
 import re
-from collections.abc import Iterable, Sequence
+from collections.abc import Callable, Iterable, Iterator, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -104,6 +106,62 @@ _FORCE_CONNECT_FALLBACK = False
 
 class EarthmoverSparkError(Exception):
     """Engine-level configuration or semantics error."""
+
+
+# ---------------------------------------------------------------------------
+# in-plan checks with a failure-path message
+# ---------------------------------------------------------------------------
+#
+# An operator that must reject bad data (pivot's uniqueness rule) puts a
+# ``raise_error`` into its plan instead of running a job while it is
+# built: the check then runs inside the job that writes the data. The
+# error text carries a token; ``deferred_errors`` turns a Spark error
+# that carries a registered token into ``EarthmoverSparkError`` with the
+# message the token's callable computes — the only place that pays for
+# the (job-running) details, and only when the check failed.
+
+_DEFERRED: dict[str, Callable[[], str]] = {}
+_DEFERRED_IDS = itertools.count(1)
+#: entries registered outside a ``deferred_errors`` scope (operators
+#: called directly) are kept for the most recent ones only
+_DEFERRED_MAX = 256
+
+
+def deferred_error(summary: str, message: Callable[[], str]) -> Column:
+    """A ``raise_error`` Column whose text is ``summary`` plus a token
+    registered against ``message``. Unexplained (no scope, or dropped),
+    the Spark error still says ``summary``."""
+    token = f"[earthmover_spark check {next(_DEFERRED_IDS)}]"
+    _DEFERRED[token] = message
+    while len(_DEFERRED) > _DEFERRED_MAX:
+        _DEFERRED.pop(next(iter(_DEFERRED)))
+    return F.raise_error(F.lit(f"{summary} {token}"))
+
+
+@contextlib.contextmanager
+def deferred_errors() -> Iterator[None]:
+    """Scope for building and writing nodes: a Spark error that carries
+    a token of ``deferred_error`` is re-raised as
+    ``EarthmoverSparkError(message())``. Entries registered inside the
+    scope are dropped when it exits, so a long session holds on to no
+    DataFrame of a finished run. The registry is per process: scopes in
+    concurrent threads would drop each other's entries, leaving those
+    errors with their ``summary`` text only."""
+    before = set(_DEFERRED)
+    try:
+        yield
+    except Exception as exc:
+        err: BaseException | None = exc
+        while err is not None:
+            text = str(err)
+            for token, message in list(_DEFERRED.items()):
+                if token in text:
+                    raise EarthmoverSparkError(message()) from exc
+            err = err.__cause__ or err.__context__
+        raise
+    finally:
+        for token in set(_DEFERRED) - before:
+            _DEFERRED.pop(token, None)
 
 
 def checkpoint_cut(df: DataFrame, eager: bool = True) -> DataFrame:

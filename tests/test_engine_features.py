@@ -746,3 +746,60 @@ def test_explain_project_returns_plans_without_writing(spark, tmp_path):
     # nothing written anywhere under the example's output dir
     out = os.path.join(os.path.dirname(cfg), "outputs")
     assert not os.path.exists(out)
+
+
+def test_explain_project_plans_the_rendered_lines(spark, tmp_path):
+    """A text destination's plan is the plan of the lines it writes: a
+    template that needs the Jinja UDF shows its Python stage, a lowered
+    one shows none, and a pivot's uniqueness check is in the plan of the
+    destination that reads it."""
+    import textwrap
+
+    from earthmover_spark.plans.executor import explain_project
+
+    (tmp_path / "temps.csv").write_text(
+        "station,month,temp\ns1,jan,1\ns1,feb,2\ns2,jan,3\n"
+    )
+    (tmp_path / "called.jsont").write_text(
+        '{"s": "{% call wrap() %}{{ station }}{% endcall %}"}\n'
+    )
+    (tmp_path / "plain.jsont").write_text('{"s": "{{ station }}"}\n')
+    (tmp_path / "earthmover.yaml").write_text(textwrap.dedent("""
+        config:
+          output_dir: ./out
+          macros: >-
+            {%raw%}{% macro wrap() %}<{{ caller() }}>{% endmacro %}{%endraw%}
+        sources:
+          temps:
+            file: temps.csv
+        transformations:
+          wide:
+            source: $sources.temps
+            operations:
+              - operation: pivot
+                rows_by: station
+                cols_by: month
+                values: temp
+                distinct_values: [jan, feb]
+        destinations:
+          called:
+            source: $sources.temps
+            template: ./called.jsont
+          plain:
+            source: $sources.temps
+            template: ./plain.jsont
+          summary:
+            source: $transformations.wide
+            extension: jsonl
+          columnar:
+            source: $transformations.wide
+            format: parquet
+    """))
+    plans = explain_project(spark, str(tmp_path / "earthmover.yaml"))
+    assert "ArrowEvalPython" in plans["$destinations.called"]
+    assert "EvalPython" not in plans["$destinations.plain"]
+    assert "AS line#" in plans["$destinations.summary"]
+    for dest in ("summary", "columnar"):
+        assert "raise_error" in plans[f"$destinations.{dest}"]
+        assert "pivot: duplicate" in plans[f"$destinations.{dest}"]
+    assert not (tmp_path / "out").exists()

@@ -208,8 +208,12 @@ def test_pivot_explicit_values_skips_distinct_scan(spark):
         [("s1", "jan", "1"), ("s1", "feb", "2"), ("s2", "jan", "3")],
         ["station", "month", "temp"],
     )
+    # the scheduler's job counter moves synchronously with each job
+    next_job = spark.sparkContext._jsc.sc().dagScheduler().nextJobId
+    jobs0 = next_job()
     out = DD.pivot(df, rows_by="station", cols_by="month", values="temp",
                    distinct_values=["jan", "feb"])
+    assert next_job() == jobs0  # no distinct scan, no uniqueness job
     assert set(out.columns) == {"station", "jan", "feb"}
     got = {r.station: (r.jan, r.feb) for r in out.collect()}
     assert got == {"s1": ("1", "2"), "s2": ("3", None)}

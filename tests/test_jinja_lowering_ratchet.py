@@ -330,3 +330,38 @@ def test_declared_macros_no_longer_force_udf(spark):
     assert [r.tag for r in declined.orderBy("name").collect()] == [
         "<a>", "<b>",
     ]
+
+
+def test_column_templates_lower_once(spark, monkeypatch):
+    """add_columns/modify_columns lower each template exactly once: the
+    lowered Column is used as is, and a template that declines goes to
+    the batched UDF without a second lowering attempt."""
+    from earthmover_spark.functions import jinja_compute
+    from earthmover_spark.operators.column import add_columns, modify_columns
+
+    seen = []
+    real = jinja_compute.lower_template
+
+    def spy(template, *args, **kwargs):
+        seen.append(template)
+        return real(template, *args, **kwargs)
+
+    monkeypatch.setattr(jinja_compute, "lower_template", spy)
+    macros = "{% macro wrap() %}<{{ caller() }}>{% endmacro %}"
+    called = "{% call wrap() %}{{name}}{% endcall %}"
+    df = spark.createDataFrame([("a", "1")], ["name", "n"])
+    out = add_columns(
+        df,
+        columns={"up": "{{name|upper}}", "c1": called, "c2": called + "!",
+                 "lit": "x"},
+        macros=macros,
+    )
+    out = modify_columns(out, columns={"n": "{{value}}0", "c1": called},
+                         macros=macros)
+    assert sorted(seen) == sorted(
+        ["{{name|upper}}", called, called + "!", "{{value}}0", called]
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "EvalPython" in plan, plan
+    row = out.collect()[0]
+    assert (row.up, row.c1, row.c2, row.lit, row.n) == ("A", "<a>", "<a>!", "x", "10")

@@ -9,7 +9,7 @@ from earthmover_spark.operators import column as C
 from earthmover_spark.operators import dataframe as D
 from earthmover_spark.operators import groupby as G
 from earthmover_spark.operators import row as R
-from earthmover_spark.util import EarthmoverSparkError
+from earthmover_spark.util import EarthmoverSparkError, deferred_errors
 
 
 def test_csv_all_string_empty_for_missing(spark, tmp_path):
@@ -187,11 +187,42 @@ def test_snake_case(spark):
 
 
 def test_pivot_uniqueness_error_message(spark):
+    """The uniqueness check runs in the plan: the action raises, and the
+    ``deferred_errors`` scope (the one ``Executor.run`` uses) reports the
+    reference's message."""
     df = spark.createDataFrame(
         [("r", "c", "1"), ("r", "c", "2")], ["rk", "ck", "v"]
     )
     with pytest.raises(EarthmoverSparkError, match="2 rows but only 1 unique"):
-        D.pivot(df, rows_by="rk", cols_by="ck", values="v")
+        with deferred_errors():
+            D.pivot(df, rows_by="rk", cols_by="ck", values="v").collect()
+
+
+def test_pivot_duplicate_outside_distinct_values_raises(spark):
+    """A repeated (rows_by, cols_by) pair whose cols_by value is not one
+    of ``distinct_values`` produces no output column, yet still fails
+    the check, as the eager check did."""
+    df = spark.createDataFrame(
+        [("r", "jan", "1"), ("r", "feb", "2"), ("r", "feb", "3")],
+        ["rk", "ck", "v"],
+    )
+    out = D.pivot(df, rows_by="rk", cols_by="ck", values="v",
+                  distinct_values=["jan"])
+    with pytest.raises(EarthmoverSparkError, match="3 rows but only 2 unique"):
+        with deferred_errors():
+            out.collect()
+
+
+def test_pivot_unscoped_check_still_names_itself(spark):
+    """Outside a ``deferred_errors`` scope the Spark error still says
+    which check failed."""
+    df = spark.createDataFrame(
+        [("r", "c", "1"), ("r", "c", "2")], ["rk", "ck", "v"]
+    )
+    out = D.pivot(df, rows_by="rk", cols_by="ck", values="v",
+                  distinct_values=["c"])
+    with pytest.raises(Exception, match="pivot: duplicate"):
+        out.collect()
 
 
 def test_melt_defaults(spark):

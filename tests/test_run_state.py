@@ -179,3 +179,47 @@ def test_run_releases_fan_out_persists(spark, project, monkeypatch):
     with pytest.raises(Exception, match="disk full"):
         run_project(spark, str(config))
     assert _persistent_rdds(spark) == before
+
+
+@pytest.mark.parametrize("distinct_values", [None, ["jan", "feb"]])
+def test_failed_pivot_check_leaves_no_trace(spark, tmp_path, distinct_values):
+    """A duplicate pivot key fails the run with the reference's message,
+    whether the check runs in the destination's write (explicit
+    ``distinct_values``) or in the scan for the output columns. The
+    pivot's destination is not written, no run is logged, and the run
+    keeps no check registered."""
+    from earthmover_spark import util
+
+    (tmp_path / "temps.csv").write_text(
+        "station,month,temp\ns1,jan,1\ns1,feb,2\ns1,feb,3\n"
+    )
+    pivot = {"operation": "pivot", "rows_by": "station", "cols_by": "month",
+             "values": "temp"}
+    if distinct_values:
+        pivot["distinct_values"] = distinct_values
+    (tmp_path / "earthmover.yaml").write_text(textwrap.dedent(f"""
+        config:
+          output_dir: ./out
+          state_file: ./runs.csv
+        sources:
+          temps:
+            file: temps.csv
+        transformations:
+          wide:
+            source: $sources.temps
+            operations:
+              - {json.dumps(pivot)}
+        destinations:
+          wide_out:
+            source: $transformations.wide
+            extension: jsonl
+    """))
+    config = str(tmp_path / "earthmover.yaml")
+    registered = set(util._DEFERRED)
+    with pytest.raises(util.EarthmoverSparkError,
+                       match="Found 3 rows but only 2 unique combinations"):
+        run_project(spark, config)
+    assert not (tmp_path / "out" / "wide_out.jsonl").exists()
+    assert glob.glob(str(tmp_path / "out" / "em_dest_*")) == []
+    assert RunsFile(compile_config(config), None).rows() == []
+    assert set(util._DEFERRED) == registered
