@@ -347,31 +347,6 @@ def main() -> None:
     if errors:
         payload["errors"] = errors
 
-    # contention guard: a wall time far above the best prior recorded
-    # round means the machine was busy, not that the engine regressed —
-    # flag it so a contaminated number never silently becomes the record
-    try:
-        import glob
-
-        priors = []
-        here = os.path.dirname(os.path.abspath(__file__))
-        for p in sorted(glob.glob(os.path.join(here, "BENCH_r*.json"))):
-            with open(p) as fh:
-                rec = json.load(fh)
-            if (
-                isinstance(rec.get("value"), (int, float))
-                and rec.get("sf") == payload["sf"]
-                and not rec.get("errors")
-            ):
-                priors.append(rec["value"])
-        if priors and total > 1.5 * min(priors):
-            payload["suspect"] = True
-            payload["suspect_reason"] = (
-                f"wall {total}s > 1.5x best prior {min(priors)}s at same sf"
-                " — likely machine contention, rerun on an idle box"
-            )
-    except Exception:  # noqa: BLE001 — the guard must never break bench
-        pass
     line = json.dumps(payload)
     # harden the one-line contract: r12's JSON line was emitted but lost
     # to a stdout-tail truncation on the driver side, which cost the

@@ -19,13 +19,25 @@ Improvements over the reference noted in SURVEY.md §4:
     counts (group_by, z-order and set-similarity operators,
     ``infer_types``) and ``checkpoint_cut``'s fallback;
   - Spark's schema inference when a parquet source is read.
-  ``results_file`` row counts run after the writes.
+  ``results_file`` row counts run after the writes;
+- destinations write concurrently: each write goes to a thread pool,
+  ``min(destinations, sc.defaultParallelism)`` wide, while the walk
+  goes on building later nodes. Spark schedules the jobs of separate
+  driver threads side by side, so one write's driver-side work (plan,
+  render, commit, concatenation) overlaps another's tasks. A failure
+  cancels the writes not yet started, waits for the running ones and
+  raises the first failure in DAG order. A ``results_file``'s
+  per-destination ``seconds`` is each write's own wall time; the
+  writes' times may overlap.
 """
 
 from __future__ import annotations
 
 import os
+import time
+from concurrent.futures import FIRST_EXCEPTION, Future, ThreadPoolExecutor, wait
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 from earthmover_spark.destinations import write_destination
@@ -188,8 +200,19 @@ class Executor:
         results_file: str | None = None,
         show_graph: bool = False,
     ) -> dict[str, str]:
+        """Build the selected nodes in topological order and write their
+        destinations; returns {destination: path} in that order.
+
+        Each destination write runs on a pool thread, in its own job
+        group, while later nodes are built. The pool is
+        ``min(destinations, sc.defaultParallelism)`` wide: the task
+        slots Spark has. Every submitted write is waited for before the
+        fan-out caches are released. After a failed build or write the
+        writes not yet started are cancelled, the running ones finish,
+        and the first failure in DAG order is raised; no run is logged.
+        A ``results_file``'s per-destination ``seconds`` is that write's
+        own wall time, so the writes' times may overlap."""
         import json
-        import time
 
         subset = self.graph.select(selector)
         order = self.graph.topological_order(subset)
@@ -197,39 +220,53 @@ class Executor:
         out_dir = output_dir or os.path.join(
             self.project.base_dir, self.project.output_dir
         )
+        n_dest = sum(self.graph.nodes[n].kind == "destinations" for n in order)
+        width = max(1, min(n_dest, self.spark.sparkContext.defaultParallelism))
 
         node_stats: dict[str, dict] = {}
+        writes: dict[str, Future] = {}
         t_start = time.time()
         persisted: list[DataFrame] = []
         try:
             # a failed in-plan check (pivot) is reported with its own
             # message, whether it fails while a node is built or written
-            with deferred_errors():
-                for name in order:
-                    t0 = time.time()
-                    node = self.graph.nodes[name]
-                    if node.kind == "sources":
-                        df = self._eval_source(name, node.config)
-                    elif node.kind == "transformations":
-                        df = self._eval_transformation(name, node.config)
-                    else:
-                        self._write_destination(name, node.config, out_dir)
+            with deferred_errors(), ThreadPoolExecutor(width) as pool:
+                try:
+                    for name in order:
+                        # after a failed write nothing more is built
+                        if any(_failed(f) for f in writes.values()):
+                            break
+                        t0 = time.time()
+                        node = self.graph.nodes[name]
+                        if node.kind == "sources":
+                            df = self._eval_source(name, node.config)
+                        elif node.kind == "transformations":
+                            df = self._eval_transformation(name, node.config)
+                        else:
+                            write = inheritable_thread_target(self.spark)(
+                                self._write_destination
+                            )
+                            writes[name] = pool.submit(write, name, node.config, out_dir)
+                            node_stats[name] = {}  # keeps the topological order
+                            continue
+                        if not df.isStreaming:
+                            self._check_expectations(name, node.config, df)
+                            if node.config.get("debug"):
+                                print(f"-- {name}: {len(df.columns)} columns {df.columns}")
+                                df.show(5, truncate=False)
+                            if node.config.get("repartition"):
+                                df = df.repartition(int(node.config["repartition"]))
+                            if consumers.get(name, 0) > 1:
+                                df = df.persist()
+                                persisted.append(df)
+                        self.data[name] = df
                         node_stats[name] = {"seconds": round(time.time() - t0, 3)}
-                        if self._show_progress(node.config):
-                            print(f"-- {name}: written in {node_stats[name]['seconds']}s")
-                        continue
-                    if not df.isStreaming:
-                        self._check_expectations(name, node.config, df)
-                        if node.config.get("debug"):
-                            print(f"-- {name}: {len(df.columns)} columns {df.columns}")
-                            df.show(5, truncate=False)
-                        if node.config.get("repartition"):
-                            df = df.repartition(int(node.config["repartition"]))
-                        if consumers.get(name, 0) > 1:
-                            df = df.persist()
-                            persisted.append(df)
-                    self.data[name] = df
-                    node_stats[name] = {"seconds": round(time.time() - t0, 3)}
+                except BaseException:
+                    _join(writes, failed=True)
+                    raise
+                _join(writes, failed=False)
+                for name, fut in writes.items():
+                    self.results[name], node_stats[name]["seconds"] = fut.result()
 
                 if results_file:
                     # row counts force one count per node — opt-in, like the
@@ -338,26 +375,34 @@ class Executor:
             cfg.get("show_progress", self.project.config.get("show_progress"))
         )
 
-    def _write_destination(self, name: str, cfg: dict, out_dir: str) -> None:
+    def _write_destination(
+        self, name: str, cfg: dict, out_dir: str
+    ) -> tuple[str, float]:
+        """Write one destination; returns its path and wall seconds."""
         # Attribute all jobs this destination triggers to the node name
         # (Spark UI: job group = node), the engine's ProgressBar analog.
+        # Local properties are per thread: concurrent writes keep theirs.
+        t0 = time.time()
         sc = self.spark.sparkContext
         sc.setJobGroup(name, f"earthmover_spark destination {name}")
         try:
-            self._write_destination_inner(name, cfg, out_dir)
+            path = self._write_destination_inner(name, cfg, out_dir)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
+        seconds = round(time.time() - t0, 3)
+        if self._show_progress(cfg):
+            print(f"-- {name}: written in {seconds}s")
+        return path, seconds
 
-    def _write_destination_inner(self, name: str, cfg: dict, out_dir: str) -> None:
+    def _write_destination_inner(self, name: str, cfg: dict, out_dir: str) -> str:
         df = self._resolve(cfg["source"])
         if df.isStreaming:
-            self.results[name] = self._write_streaming(name, cfg, df, out_dir)
-            return
+            return self._write_streaming(name, cfg, df, out_dir)
         if cfg.get("format") in COLUMNAR:
             from earthmover_spark.destinations.file_destination import write_columnar
 
-            self.results[name] = write_columnar(
+            return write_columnar(
                 df,
                 name.split(".", 1)[1],
                 out_dir,
@@ -366,9 +411,8 @@ class Executor:
                 compression=cfg.get("compression"),
                 target_file_mb=cfg.get("target_file_mb"),
             )
-            return
         short = name.split(".", 1)[1]
-        path = write_destination(
+        return write_destination(
             df,
             short,
             out_dir,
@@ -378,7 +422,6 @@ class Executor:
             mode=cfg.get("mode", "file"),
             **self._render_args(cfg),
         )
-        self.results[name] = path
 
     def _render_args(self, cfg: dict) -> dict:
         """How a text (template or JSON) destination renders its lines."""
@@ -392,6 +435,27 @@ class Executor:
             "loader_dir": self.project.base_dir,
             "linearize": cfg.get("linearize", True),
         }
+
+
+def _failed(fut: Future) -> bool:
+    return fut.done() and not fut.cancelled() and fut.exception() is not None
+
+
+def _join(writes: dict[str, Future], failed: bool) -> None:
+    """Wait for every submitted write. After a failure (the build's,
+    ``failed``, or a write's) the writes not yet started are cancelled
+    and the first failed write in DAG order is raised."""
+    futures = list(writes.values())
+    if not failed:
+        wait(futures, return_when=FIRST_EXCEPTION)
+        failed = any(_failed(f) for f in futures)
+    if failed:
+        for fut in futures:
+            fut.cancel()
+    wait(futures)
+    for fut in futures:
+        if _failed(fut):
+            raise fut.exception()
 
 
 def explain_project(
