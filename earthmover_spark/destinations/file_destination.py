@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from earthmover_spark.functions.jinja_compute import _compile, template_column
-from earthmover_spark.util import string_view
+from earthmover_spark.util import sql_ident, stringify
 
 _logger = logging.getLogger(__name__)
 
@@ -57,9 +57,9 @@ def render_lines(
 
     cols = df.columns
     # all-string view with '' for missing (reference destination.py:57)
-    casted = df.select(*[string_view(F.col(c)).alias(c) for c in cols])
+    casted = stringify(df)
     if template is None:
-        line = F.to_json(F.struct(*[F.col(c) for c in cols]))
+        line = F.to_json(F.struct(*[F.col(sql_ident(c)) for c in cols]))
     else:
         if linearize:
             # the reference flattens the TEMPLATE source, not the

@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
 from earthmover_spark.functions.pyfloat import py_float_repr
-from earthmover_spark.util import string_view
+from earthmover_spark.util import is_non_null_string, sql_ident, string_view
 
 # ---------------------------------------------------------------------------
 # Native lowering: kinds, filters and the shared kind-checked cores
@@ -138,6 +138,26 @@ def _render_view(col: Column, kind: str) -> Column:
     return string_view(col)
 
 
+def _render_expr(node, env, fr) -> Column:
+    """``_render_view`` of a lowered expression. A flat column reference
+    that the frame schema proves a non-null string renders as the bare
+    column: its view would be a no-op Catalyst drops, built at the cost
+    of py4j round trips."""
+    from jinja2 import nodes
+
+    if (
+        isinstance(node, nodes.Name)
+        and node.name not in env
+        and fr.schema is not None
+    ):
+        name = fr.value_col if node.name == "value" else node.name
+        if name in fr.columns:
+            field = _schema_field(fr.schema, name)
+            if field is not None and is_non_null_string(field):
+                return F.col(name)
+    return _render_view(*_ast_expr_column(node, env, fr))
+
+
 class _NotLowerable(Exception):
     pass
 
@@ -166,6 +186,14 @@ def _leaf_kind_of(dt) -> str | None:
     return kind
 
 
+def _schema_field(schema, name: str):
+    """The schema's field ``name``, or None when the schema lacks it."""
+    try:
+        return schema[name]
+    except KeyError:
+        return None
+
+
 def _flat_kind(name: str, schema) -> str:
     """Render kind for a top-level column. Without a schema (direct
     lower_template calls) every column is assumed string — the
@@ -178,10 +206,10 @@ def _flat_kind(name: str, schema) -> str:
     Python reprs the Jinja UDF renders)."""
     if schema is None:
         return "str"
-    try:
-        dt = schema[name].dataType
-    except KeyError:
+    field = _schema_field(schema, name)
+    if field is None:
         return "str"  # name not in this schema view — keep old behavior
+    dt = field.dataType
     kind = _leaf_kind_of(dt)
     if kind is None:
         raise _NotLowerable(
@@ -700,8 +728,7 @@ def _ast_expr_column(node, env, fr: _Frame):
     if isinstance(node, nodes.Call):
         return _ast_call(node, env, fr)
     if isinstance(node, nodes.Concat):
-        lowered = [lower(n) for n in node.nodes]
-        return F.concat(*[_render_view(c, k) for c, k in lowered]), "str"
+        return F.concat(*[_render_expr(n, env, fr) for n in node.nodes]), "str"
     op = type(node).__name__
     if op in _ARITH:
         left, lk = lower(node.left)
@@ -1108,9 +1135,7 @@ def _ast_stmts(body, env, fr: _Frame, pieces, top: bool = False):
                 try:
                     pieces.append(_jinja_str(_ast_const(child, env)))
                 except _NotConst:
-                    pieces.append(
-                        _render_view(*_ast_expr_column(child, env, fr))
-                    )
+                    pieces.append(_render_expr(child, env, fr))
         elif isinstance(node, nodes.If):
             # constant tests (loop var / loop.* / literals) fold away
             # branch-by-branch; ROW-DEPENDENT tests (r13b) compile via
@@ -1403,8 +1428,7 @@ def jinja_udf_column(
         return pd.Series(out, index=pdf.index)
 
     render = F.pandas_udf(_render_batch, StringType())
-    struct_cols = [F.col(c).alias(c) for c in columns]
-    return render(F.struct(*struct_cols))
+    return render(F.struct(*[F.col(sql_ident(c)).alias(c) for c in columns]))
 
 
 def jinja_udf_struct(
@@ -1454,7 +1478,7 @@ def jinja_udf_struct(
         return pd.DataFrame(out, index=pdf.index)
 
     render = F.pandas_udf(_render_batch, schema)
-    return render(F.struct(*[F.col(c).alias(c) for c in columns]))
+    return render(F.struct(*[F.col(sql_ident(c)).alias(c) for c in columns]))
 
 
 def template_column(

@@ -22,6 +22,7 @@ from earthmover_spark.util import (
     expand_column_specs,
     snake_case,
     string_view,
+    string_views,
 )
 
 
@@ -164,8 +165,7 @@ def combine_columns(
     (reference earthmover/operations/column.py:257-289). NULLs render as
     '' per the all-string model."""
     cols = expand_column_specs(ensure_list(columns), df.columns, on_missing="error")
-    parts = [string_view(F.col(c)) for c in cols]
-    return df.withColumn(new_column, F.concat_ws(separator, *parts))
+    return df.withColumn(new_column, F.concat_ws(separator, *string_views(df, cols)))
 
 
 #: above this many map entries, a when-chain expression tree becomes
@@ -222,13 +222,13 @@ def map_values(
             )
         return out
     for c in targets:
-        src = F.col(c)
+        src = F.col(c).cast("string")
         expr = None
         for k, v in mapping.items():
             tgt = F.lit("" if v is None else str(v))
-            cond = src.cast("string") == F.lit(str(k))
+            cond = src == F.lit(str(k))
             expr = F.when(cond, tgt) if expr is None else expr.when(cond, tgt)
-        out = out.withColumn(c, expr.otherwise(src.cast("string")))
+        out = out.withColumn(c, expr.otherwise(src))
     return out
 
 

@@ -13,7 +13,7 @@ from earthmover_spark.util import (
     EarthmoverSparkError,
     deferred_error,
     ensure_list,
-    string_view,
+    stringify,
 )
 
 JOIN_TYPES = {"inner": "inner", "left": "left", "right": "right", "outer": "full_outer"}
@@ -158,7 +158,7 @@ def melt(
         raise EarthmoverSparkError(f"melt: columns not in dataset: {missing}")
     if not vals:
         vals = [c for c in df.columns if c not in ids]
-    casted = df.withColumns({c: string_view(F.col(c)) for c in vals})
+    casted = stringify(df, vals)
     return casted.unpivot(ids, vals, var_name, value_name)
 
 

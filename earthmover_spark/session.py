@@ -25,6 +25,21 @@ def get_spark(
     Arrow on (the Jinja pandas_udf path crosses JVM->Python via Arrow
     batches), and shuffle partitions sized to the actual parallelism
     instead of Spark's legacy 200.
+
+    Call-site capture is off
+    (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+    pyspark wraps every ``F.*`` call and DataFrame method in
+    ``_with_origin``, which records the Python call site in the JVM for
+    error messages and costs about ten extra py4j round trips per call:
+    a perfbench project spent more than half of its plan-building round
+    trips there. The call sites it records are the engine's own lines
+    (``jinja_compute.py:NNN``), which tell a YAML user nothing. To debug
+    the engine itself, turn it back on with
+    ``SPARK_GRAFT_EXTRA_CONF="spark.python.sql.dataFrameDebugging.enabled=true"``.
+    pyspark reads the setting once per process, at the first API call
+    made while a session is active, so set it before building any
+    DataFrame. A caller that builds its own session (not through
+    ``get_spark``) keeps that session's own setting.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if master is None:
@@ -41,6 +56,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

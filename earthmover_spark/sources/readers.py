@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from earthmover_spark.util import EarthmoverSparkError, string_view
+from earthmover_spark.util import EarthmoverSparkError, stringify
 
 #: process-lifetime cache dir for URL-source fetches (see read_source)
 _URL_CACHE: str | None = None
@@ -202,7 +202,7 @@ def read_csv(
             )
         df = df.toDF(*columns)
     # missing values are empty strings, not NULLs (keep_default_na=False)
-    return df.withColumns({c: string_view(F.col(c)) for c in df.columns})
+    return stringify(df)
 
 
 def read_fixedwidth(

@@ -13,10 +13,12 @@ import fnmatch
 import itertools
 import logging
 import re
+import threading
 from collections.abc import Callable, Iterable, Iterator, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField
 
 try:  # classic py4j-backed PySpark
     from py4j.protocol import Py4JError as _Py4JError
@@ -90,6 +92,46 @@ def lit_double_matrix(xss: Sequence[Sequence[float]]) -> Column:
         )
         + ")"
     )
+
+
+class RoundTrips:
+    """What ``count_round_trips`` counted: ``n`` py4j commands."""
+
+    def __init__(self) -> None:
+        self.n = 0
+
+
+#: the py4j command that releases a Python-side handle of a JVM object;
+#: the py4j GC thread sends these whenever Python collects a handle, so
+#: they say nothing about the code being measured
+_PY4J_GC_DELETE = "m\nd\n"
+
+
+@contextlib.contextmanager
+def count_round_trips(spark) -> Iterator[RoundTrips]:
+    """Count the Python->JVM round trips (py4j commands) every thread of
+    this process sends while the scope is open, apart from the GC
+    thread's handle deletes. Plan construction pays one round trip per
+    ``F.*`` call, ``Column`` method and DataFrame method, so the count is
+    the driver-side cost of building a plan, independent of the host's
+    speed."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    counted = RoundTrips()
+    lock = threading.Lock()
+
+    def counting_send(command, *args, **kwargs):
+        if not command.startswith(_PY4J_GC_DELETE):
+            with lock:
+                counted.n += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting_send
+    try:
+        yield counted
+    finally:
+        del client.send_command
+
 
 _logger = logging.getLogger(__name__)
 
@@ -276,11 +318,49 @@ def string_view(col: Column) -> Column:
     return F.coalesce(col.cast("string"), F.lit(""))
 
 
+#: the type of the all-string model (a collated string is not it: the
+#: view's cast to "string" changes its collation)
+_STRING = StringType()
+
+
+def is_non_null_string(field: StructField) -> bool:
+    """Whether a schema field is already in the all-string model."""
+    return field.dataType == _STRING and not field.nullable
+
+
+def string_views(df: DataFrame, columns: Iterable[str]) -> list[Column]:
+    """``string_view`` of each named column of ``df``, except that a
+    column the schema proves a non-null string is taken as it is."""
+    schema = df.schema
+    return [
+        F.col(sql_ident(c)) if is_non_null_string(schema[c])
+        else string_view(F.col(sql_ident(c)))
+        for c in columns
+    ]
+
+
 def stringify(df: DataFrame, columns: Iterable[str] | None = None) -> DataFrame:
     """Cast columns to string with NULL -> '' (all-string data model,
-    reference: earthmover/nodes/source.py:406 / docs/design.md:44)."""
+    reference: earthmover/nodes/source.py:406 / docs/design.md:44).
+
+    Each view costs py4j round trips while the plan is built, and
+    Catalyst drops it again where it is a no-op, so the schema decides:
+    non-null string columns are kept as they are, nullable string
+    columns get '' in one ``na.fill``, and only the other types get a
+    ``string_view`` each. The optimized plan is the same as with a view
+    on every column."""
+    schema = df.schema
     cols = list(columns) if columns is not None else df.columns
-    return df.withColumns({c: string_view(F.col(c)) for c in cols})
+    nullable = [c for c in cols if schema[c].dataType == _STRING and schema[c].nullable]
+    typed = [c for c in cols if schema[c].dataType != _STRING]
+    if nullable:
+        # na.fill resolves names as SQL identifiers: quote dotted ones
+        df = df.na.fill("", subset=[sql_ident(c) for c in nullable])
+    if typed:
+        df = df.withColumns(
+            {c: string_view(F.col(sql_ident(c))) for c in typed}
+        )
+    return df
 
 
 _SNAKE_RE_1 = re.compile(r"[\-\.\s/\\]+")

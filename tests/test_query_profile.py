@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 from tools.query_profile import profile, warm_session
 
 LAYERS = {
-    "build_sec", "analyze_sec", "plan_sec", "first_exec_sec", "cold_sec",
+    "build_sec", "py4j.round_trips", "analyze_sec", "plan_sec", "first_exec_sec", "cold_sec",
     "warm_sec", "plan_lines", "plan_chars",
 }
 
@@ -26,6 +26,7 @@ def test_profile_reports_every_field(grouped):
     assert len(grouped["warm_sec"]) == 3
     assert all(grouped[k] >= 0 for k in LAYERS - {"warm_sec"})
     assert grouped["plan_lines"] > 1 and grouped["plan_chars"] > 0
+    assert grouped["py4j.round_trips"] > 0
     for counter in ("spark.jobs", "spark.stages", "spark.tasks",
                     "spark.task_run_s", "spark.spill_bytes"):
         assert counter in grouped

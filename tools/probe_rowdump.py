@@ -37,7 +37,7 @@ def main() -> None:
         jinja_udf_column,
         lower_template,
     )
-    from earthmover_spark.util import string_view
+    from earthmover_spark.util import stringify
 
     spark = get_spark("rowdump-probe")
     path = f"/tmp/rowdump_probe_{N}.parquet"
@@ -52,7 +52,7 @@ def main() -> None:
     ).write.mode("overwrite").parquet(path)
     df = spark.read.parquet(path)
     cols = df.columns
-    casted = df.select(*[string_view(F.col(c)).alias(c) for c in cols])
+    casted = stringify(df)
 
     native = lower_template(
         TMPL, cols, None, casted.schema, self_row_data=True

@@ -5,7 +5,8 @@ Usage: python tools/query_profile.py [--repeat N] query [query ...]
 Runs each named `__spark_entry__` query against $SPARK_GRAFT_SF_DIR
 (default sf0.1) on a warmed session and prints one JSON line per query:
 
-  {"query": ..., "build_sec": ..., "analyze_sec": ..., "plan_sec": ...,
+  {"query": ..., "build_sec": ..., "py4j.round_trips": N,
+   "analyze_sec": ..., "plan_sec": ...,
    "first_exec_sec": ..., "cold_sec": ..., "warm_sec": [...],
    "plan_lines": N, "plan_chars": N, "spark.jobs": N, "spark.stages": N,
    "spark.tasks": N, "spark.shuffle_write_bytes": N, ..., "udf.rows": N,
@@ -13,9 +14,11 @@ Runs each named `__spark_entry__` query against $SPARK_GRAFT_SF_DIR
 
 The layers split a query's one-shot cost: Python build, analyze,
 optimize+plan, first exec (incl. janino codegen), then N warm execs;
-`cold_sec` is their one-shot sum. `plan_lines`/`plan_chars` size the
-formatted physical plan, the proxy for what the driver must optimize
-and janino must compile. The `spark.*` and `udf.*` counters come from
+`cold_sec` is their one-shot sum. `py4j.round_trips` counts the
+build's Python->JVM calls (`earthmover_spark.util.count_round_trips`),
+its driver-side cost in a unit no host's speed changes.
+`plan_lines`/`plan_chars` size the formatted physical plan, the proxy
+for what the driver must optimize and janino must compile. The `spark.*` and `udf.*` counters come from
 the status stores (`perfbench.tracing.SparkCounters`) and cover the last
 exec only, so driver actions inside the build are excluded.
 
@@ -146,10 +149,12 @@ def profile(spark, build, repeat: int = 2) -> dict:
     """Build the DataFrame once (``build()``), then time analyze,
     optimize+plan, the first exec and ``repeat`` warm execs; the Spark
     counters cover the last exec."""
+    from earthmover_spark.util import count_round_trips
     from perfbench.tracing import SparkCounters
 
     t0 = time.perf_counter()
-    df = build()
+    with count_round_trips(spark) as round_trips:
+        df = build()
     build_sec = round(time.perf_counter() - t0, 3)
     qe = df._jdf.queryExecution()
     analyze_sec = _seconds(qe.analyzed)
@@ -166,6 +171,7 @@ def profile(spark, build, repeat: int = 2) -> dict:
     stats = {**counters.delta(), **_udf_counters(sql, counters, after_id)}
     return {
         "build_sec": build_sec,
+        "py4j.round_trips": round_trips.n,
         "analyze_sec": analyze_sec,
         "plan_sec": plan_sec,
         "first_exec_sec": execs[0],
