@@ -15,10 +15,10 @@ wall-clock medians over `reps`:
   join_salted      salted_join (explicit salting, AQE off)
   join_bucketed    pre-bucketed both sides -> zero-Exchange join
 
-Prints ONE JSON line; `python bench_scale.py --update-scale-md` also
-rewrites the measured-results section of SCALE.md.
+Prints ONE JSON line. SCALE.md's "Measured skew/scale results" table
+is a recorded run of this script (the box is named there).
 
-Usage: python bench_scale.py [--rows 20000000] [--update-scale-md]
+Usage: python bench_scale.py [--rows 20000000]
 """
 
 from __future__ import annotations
@@ -156,55 +156,14 @@ def main() -> None:
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
-    line = {
+    print(json.dumps({
         "metric": "skew_scale_bench",
         "value": round(sum(results.values()), 3),
         "unit": "sec",
         "queries": results,
         "rows": rows,
         "hot_fraction": HOT_FRACTION,
-    }
-    print(json.dumps(line))
-    if "--update-scale-md" in sys.argv:
-        update_scale_md(line)
-
-
-def update_scale_md(line: dict) -> None:
-    marker = "## Measured skew/scale results"
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "SCALE.md")
-    text = open(path).read()
-    r = line["queries"]
-    section = f"""{marker}
-
-`bench_scale.py` on a synthetic Zipfian workload ({line['rows']:,} fact
-rows, {int(line['hot_fraction']*100)}% of them under ONE hot key, 100k dim keys;
-local[32], medians of 3, broadcast disabled for the join cases so the
-shuffle strategies are actually exercised):
-
-| case | median sec |
-|---|---|
-| groupBy skewed key (plain, AQE) | {r['group_plain']} |
-| salted_group_by (two-phase) | {r['group_salted']} |
-| fact-dim join, sort-merge, no AQE | {r['join_smj_noaqe']} |
-| fact-dim join, AQE skew split | {r['join_aqe']} |
-| salted_join (explicit, no AQE) | {r['join_salted_noaqe']} |
-| pre-bucketed join (zero Exchange) | {r['join_bucketed']} |
-"""
-    if marker in text:
-        # replace only the header+table WITHIN this marker's section;
-        # later '## ' sections (and their tables) must stay intact
-        head, rest = text.split(marker, 1)
-        nxt = rest.find("\n## ")
-        own, after_sections = (
-            (rest, "") if nxt < 0 else (rest[:nxt], rest[nxt:])
-        )
-        last_pipe = own.rfind("|")
-        tail = own[last_pipe + 1:] if last_pipe >= 0 else own
-        prose = tail.split("\n\n", 1)[1] if "\n\n" in tail else ""
-        text = head + section + "\n" + prose + after_sections
-    else:
-        text = text.rstrip() + "\n\n" + section
-    open(path, "w").write(text)
+    }))
 
 
 if __name__ == "__main__":

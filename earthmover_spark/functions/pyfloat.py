@@ -27,7 +27,7 @@ float-kind Jinja render onto the 10-100x-slower Python UDF path.
 Naively composed, the expression tree blows up combinatorially — every
 intermediate Column re-inlines its whole upstream at each reference
 (the first cut produced a multi-megabyte plan janino refused to
-compile). ``_let`` fixes that: it binds an intermediate ONCE as a
+compile). ``util.let`` fixes that: it binds an intermediate ONCE as a
 higher-order-function lambda variable (``transform(array(v), f)[0]``),
 so downstream references are name lookups and the tree stays linear.
 
@@ -40,36 +40,24 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-try:  # classic py4j-backed PySpark
-    from py4j.protocol import Py4JError as _Py4JError
-except ImportError:  # pragma: no cover - Spark Connect-only install
-    class _Py4JError(Exception):
-        pass
+from earthmover_spark.util import _Py4JError, let
 
 _MAX = 2**31 - 1
-
-
-def _let(value: Column, body) -> Column:
-    """SQL 'let': evaluate ``value`` once, reference it many times.
-    ``transform`` binds the element as a named lambda variable, so
-    ``body``'s references are variable lookups instead of re-inlined
-    copies of the producing expression."""
-    return F.transform(F.array(value), body)[0]
 
 
 def _digits_p(u: Column) -> Column:
     """Unsigned Java double string -> struct(d, p) with value
     = 0.d x 10^p and d carrying no leading/trailing zeros."""
-    return _let(
+    return let(
         F.when(
             u.contains("E"), F.substring_index(u, "E", 1)
         ).otherwise(u),
-        lambda mant: _let(
+        lambda mant: let(
             F.concat(
                 F.substring_index(mant, ".", 1),
                 F.substring_index(mant, ".", -1),
             ),
-            lambda raw: _let(
+            lambda raw: let(
                 F.regexp_replace(raw, "^0+", ""),
                 lambda stripped: F.struct(
                     F.regexp_replace(stripped, "0+$", "").alias("d"),
@@ -173,15 +161,15 @@ def _repair_step(x: Column, ex: Column, dp: Column) -> Column:
             _probe(far, n - 1), far
         )
 
-    return _let(
+    return let(
         F.length(d),
-        lambda n: _let(
+        lambda n: let(
             F.when(
                 ex["ok"], _round_from(ex["xs"], n - 1)
             ).otherwise(
                 F.substring(d, 1, n - 1).try_cast("bigint").cast("string")
             ),
-            lambda exact_or_down: _let(
+            lambda exact_or_down: let(
                 F.when(
                     ex["ok"],
                     F.when(
@@ -214,9 +202,9 @@ def _precorrect(x: Column, ex: Column, dp: Column) -> Column:
     available; the correctly rounded same-length decimal is at least
     as near as Java's, so it round-trips by construction."""
     d, p = dp["d"], dp["p"]
-    return _let(
+    return let(
         F.length(d),
-        lambda n: _let(
+        lambda n: let(
             F.when(ex["ok"], _round_from(ex["xs"], n)),
             lambda raw: F.struct(
                 F.when(
@@ -238,16 +226,16 @@ _REPAIR_ROUNDS = 3
 
 
 def _repair(x: Column, dp: Column) -> Column:
-    return _let(
+    return let(
         _exact_ctx(x),
         lambda ex: _repair_loop(x, ex, dp),
     )
 
 
 def _repair_loop(x: Column, ex: Column, dp: Column) -> Column:
-    dp = _let(dp, lambda cur: _precorrect(x, ex, cur))
+    dp = let(dp, lambda cur: _precorrect(x, ex, cur))
     for _ in range(_REPAIR_ROUNDS):
-        dp = _let(dp, lambda cur: _repair_step(x, ex, cur))
+        dp = let(dp, lambda cur: _repair_step(x, ex, cur))
     return dp
 
 
@@ -548,14 +536,14 @@ def _slow_repr_columns(x: Column) -> Column:
     s = x.cast("string")
     return F.concat(
         F.when(s.startswith("-"), F.lit("-")).otherwise(F.lit("")),
-        _let(
+        let(
             x,
-            lambda xv: _let(
+            lambda xv: let(
                 F.when(
                     xv.cast("string").startswith("-"),
                     F.substring(xv.cast("string"), 2, _MAX),
                 ).otherwise(xv.cast("string")),
-                lambda u: _let(_repair(xv, _digits_p(u)), _assemble),
+                lambda u: let(_repair(xv, _digits_p(u)), _assemble),
             ),
         ),
     )
@@ -573,7 +561,7 @@ def py_float_repr(col: Column) -> Column:
     this exponent zone, tests/test_property.py). That zone is where
     real pipeline floats live, so the common render is a plain cast
     that stays inside whole-stage codegen — the branch structure
-    keeps every ``_let`` (higher-order transform, interpreted eval)
+    keeps every ``let`` (higher-order transform, interpreted eval)
     strictly inside the OTHERWISE, so fast-zone rows never touch it
     (moving the lets outside measured ~3x slower on an all-fast-zone
     render)."""

@@ -17,7 +17,7 @@ Scale design notes (the 100 TB story):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from earthmover_spark.llm.textstats import (
@@ -25,6 +25,7 @@ from earthmover_spark.llm.textstats import (
     shingles,
     spread_narrow_scan as _spread,
 )
+from earthmover_spark.util import h60
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -84,19 +85,6 @@ def novel_docs(
     return batch.join(
         seen.select(hash_col).distinct(), hash_col, "left_anti"
     )
-
-
-# ---------------------------------------------------------------------------
-# md5-derived integer hashes (engine-portable)
-# ---------------------------------------------------------------------------
-
-
-def _h60(col: Column, salt: str | Column = "") -> Column:
-    """Deterministic 60-bit integer hash: first 15 hex chars of
-    md5(salt || value), parsed base-16. Fits in a positive BIGINT on any
-    engine (no sign issues), reproducible outside the JVM."""
-    salted = F.concat(F.lit(salt) if isinstance(salt, str) else salt, col)
-    return F.conv(F.substring(F.md5(salted), 1, 15), 16, 10).cast("bigint")
 
 
 # ---------------------------------------------------------------------------
@@ -369,7 +357,7 @@ def simhash_signatures(
         F.explode(
             F.array_distinct(shingles(F.col(text_col), shingle_n))
         ).alias("__t__"),
-    ).withColumn("__h__", _h60(F.col("__t__")))
+    ).withColumn("__h__", h60(F.col("__t__")))
     votes = ex.groupBy(id_col).agg(
         *[
             F.sum(

@@ -17,7 +17,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from earthmover_spark.llm.textstats import spread_narrow_scan
-from earthmover_spark.util import EarthmoverSparkError
+from earthmover_spark.util import EarthmoverSparkError, h60
 
 #: 60-bit hash space (15 hex chars of md5 — fits a positive BIGINT)
 _HASH_SPACE = float(1 << 60)
@@ -49,12 +49,6 @@ def _strata_counts(df: DataFrame, strata_col: str, op: str) -> list:
             "stratify on a low-cardinality column"
         )
     return rows
-
-
-def _h60(col: Column, salt: str) -> Column:
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(salt), col.cast("string"))), 1, 15), 16, 10
-    ).cast("bigint")
 
 
 def chunk_documents(
@@ -99,7 +93,7 @@ def deterministic_sample(
     if not 0.0 <= fraction <= 1.0:
         raise EarthmoverSparkError("deterministic_sample: fraction must be in [0,1]")
     threshold = int(fraction * _HASH_SPACE)
-    return df.filter(_h60(F.col(key_col), f"{salt}:") < F.lit(threshold))
+    return df.filter(h60(F.col(key_col), f"{salt}:") < F.lit(threshold))
 
 
 def stratified_sample(
@@ -159,7 +153,7 @@ def stratified_sample(
                     "column's type — it would cast to NULL and match "
                     "nothing"
                 ) from None
-    h = _h60(F.col(key_col), f"{salt}:")
+    h = h60(F.col(key_col), f"{salt}:")
     expr = None
     for name, frac in fractions.items():
         # compare NATIVELY, not via str(): Spark renders booleans as
@@ -300,7 +294,7 @@ def budget_sample(
 
     if budget <= 0:
         raise EarthmoverSparkError("budget_sample: budget must be > 0")
-    h = _h60(F.col(key_col), f"{salt}:")
+    h = h60(F.col(key_col), f"{salt}:")
     part = [strata_col] if strata_col else []
     w = (
         Window.partitionBy(*part)
@@ -353,7 +347,7 @@ def split_dataset(
     total = sum(weights.values())
     if total <= 0:
         raise EarthmoverSparkError("split_dataset: weights must sum > 0")
-    h = _h60(
+    h = h60(
         F.coalesce(F.col(key_col).cast("string"), F.lit("\x00null")),
         f"{salt}:",
     )
@@ -390,7 +384,7 @@ def kfold_assign(
     if k < 2:
         raise EarthmoverSparkError("kfold_assign: k must be >= 2")
     return df.withColumn(
-        fold_col, F.pmod(_h60(F.col(key_col), f"{salt}:"), F.lit(k))
+        fold_col, F.pmod(h60(F.col(key_col), f"{salt}:"), F.lit(k))
     )
 
 
@@ -541,7 +535,7 @@ def shuffle_shard(
     from pyspark.sql import Window
 
     if algo == "md5":
-        h = _h60(F.col(key_col), f"{salt}:")
+        h = h60(F.col(key_col), f"{salt}:")
     else:
         h = F.abs(
             F.xxhash64(F.concat(F.lit(salt), F.col(key_col).cast("string")))
@@ -580,7 +574,7 @@ def cap_per_group(
     from earthmover_spark.operators.groupby import top_n_rows
 
     groups = [group_cols] if isinstance(group_cols, str) else list(group_cols)
-    hashed = df.withColumn("__cap_h__", _h60(F.col(key_col), f"{salt}:"))
+    hashed = df.withColumn("__cap_h__", h60(F.col(key_col), f"{salt}:"))
     capped = top_n_rows(
         hashed,
         group_by_columns=groups,
@@ -616,7 +610,7 @@ def weighted_sample(
         raise EarthmoverSparkError("weighted_sample: n must be >= 1")
     w = F.col(weight_col).cast("double")
     # (h + 1) / 2^60 in (0, 1] — u == 0 would make ln(u) blow up
-    u = (_h60(F.col(key_col), f"{salt}:") + 1) / F.lit(_HASH_SPACE)
+    u = (h60(F.col(key_col), f"{salt}:") + 1) / F.lit(_HASH_SPACE)
     key = F.pow(u, F.lit(1.0) / w)
     return (
         df.filter(w > 0)
@@ -652,7 +646,7 @@ def epoch_repeat(
     f = F.lit(float(default_factor))
     for g, v in factors.items():
         f = F.when(F.col(group_col) == g, F.lit(float(v))).otherwise(f)
-    u = _h60(F.col(key_col), f"{salt}:") / F.lit(_HASH_SPACE)
+    u = h60(F.col(key_col), f"{salt}:") / F.lit(_HASH_SPACE)
     n_copies = (
         F.floor(f).cast("int")
         + F.when(u < f - F.floor(f), 1).otherwise(0)
@@ -696,7 +690,7 @@ def negative_samples(
     idx = global_index(df.select(id_col), [id_col], out_col="__idx__")
     tot = idx.agg(F.count(F.lit(1)).alias("__n__"))
     j = F.explode(F.sequence(F.lit(1), F.lit(k))).alias("j")
-    h = _h60(
+    h = h60(
         F.concat(
             F.col(id_col).cast("string"),
             F.lit(":"),
@@ -756,7 +750,7 @@ def sample_ladder(
         raise EarthmoverSparkError(
             "sample_ladder: fractions must be strictly increasing"
         )
-    h = _h60(F.col(key_col), f"{salt}:")
+    h = h60(F.col(key_col), f"{salt}:")
     rung = F.lit(None).cast("int")
     for i in range(len(fr) - 1, -1, -1):
         rung = F.when(
@@ -838,7 +832,7 @@ def cdc_chunks(
         win = F.substring(text, i - window + 1, F.lit(window))
         if hash_fn == "xxhash64":
             return F.xxhash64(F.lit(salt), win)
-        return _h60(win, f"{salt}:")
+        return h60(win, f"{salt}:")
 
     boundaries = F.when(
         n - 1 >= window,

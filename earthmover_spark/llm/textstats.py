@@ -15,7 +15,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from earthmover_spark.util import EarthmoverSparkError
+from earthmover_spark.util import EarthmoverSparkError, _Py4JError
 
 _SIZE_SUFFIX = {
     "": 1, "b": 1,
@@ -29,7 +29,7 @@ _SIZE_SUFFIX = {
 def _parse_bytes(v) -> int:
     """Parse a Spark size conf value ('134217728', '128m', '4194304b')."""
     m = re.match(r"^\s*(\d+)\s*([a-z]*)\s*$", str(v).lower())
-    if not m:
+    if not m or m.group(2) not in _SIZE_SUFFIX:
         raise ValueError(f"unparseable size: {v!r}")
     return int(m.group(1)) * _SIZE_SUFFIX[m.group(2)]
 
@@ -90,9 +90,14 @@ def spread_narrow_scan(df: DataFrame, min_total_bytes: int = 0) -> DataFrame:
     At real scale neither path triggers (the scan is already wide)."""
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
+    if df.isStreaming:  # an unbounded source has no file list to size
+        return df
+    # a file that vanished or cannot be read since the scan was planned
+    # (a Java error through py4j) or an unparseable size conf means the
+    # width is unknown: leave the frame as it is. Anything else is a bug.
     try:
         files = df.inputFiles()
-    except Exception:
+    except _Py4JError:
         return df
     n_files = len(files)
     if n_files == 0 or n_files >= target:
@@ -105,7 +110,7 @@ def spread_narrow_scan(df: DataFrame, min_total_bytes: int = 0) -> DataFrame:
         max_pb = _parse_bytes(
             spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
         )
-    except Exception:
+    except (_Py4JError, ValueError):
         return df
     if total < min_total_bytes:
         return df

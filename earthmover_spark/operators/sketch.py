@@ -26,7 +26,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from earthmover_spark.util import lit_double_array
+from earthmover_spark.util import h60, lit_double_array
 
 
 def distinct_sketch(
@@ -67,24 +67,11 @@ def sketch_estimate(
     ).drop(sketch_col)
 
 
-def _h60(col: Column, prefix: str) -> Column:
-    """The engine-portable 60-bit md5-prefix hash every sketch in this
-    module (and the DuckDB oracles) derive from: first 15 hex chars of
-    ``md5(prefix || value)`` as a bigint. ONE definition on purpose —
-    the oracles reproduce these exact bits, so a drifted copy would
-    silently break sketch mergeability and every value-hash twin."""
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(prefix), col.cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("bigint")
-
-
 def _cm_slot(col: Column, width: int, row: int, salt: str) -> Column:
     """md5-derived counter slot for count-min row ``row`` — the same
     engine-portable 60-bit md5-prefix hash the sampling operators use,
     so the DuckDB oracle reproduces slots exactly."""
-    return F.pmod(_h60(col, f"{salt}{row}:"), F.lit(width))
+    return F.pmod(h60(col, f"{salt}{row}:"), F.lit(width))
 
 
 def cm_sketch(
@@ -299,7 +286,7 @@ def kmv_sketch(
     if k < 1:
         raise ValueError("kmv_sketch: k must be >= 1")
     v = F.col(value_col)
-    h = _h60(v, f"{salt}:")
+    h = h60(v, f"{salt}:")
     return (
         df.filter(v.isNotNull())
         .select(h.alias("h"))
@@ -411,7 +398,7 @@ def quantile_sketch(
     )
 
     df = spread_narrow_scan(df, LIGHT_SPREAD_MIN_BYTES)
-    h = _h60(F.col(id_col), f"{salt}:")
+    h = h60(F.col(id_col), f"{salt}:")
     groups = list(group_cols)
     base = (
         df.filter(
@@ -606,7 +593,7 @@ def source_overlap(
         raise ValueError("source_overlap: k must be >= 1")
     g = F.col(group_col)
     v = F.col(value_col)
-    h = _h60(v, f"{salt}:")
+    h = h60(v, f"{salt}:")
     census = (
         df.filter(g.isNotNull() & v.isNotNull())
         .select(g.alias("__g__"), h.alias("h"))

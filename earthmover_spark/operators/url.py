@@ -20,7 +20,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from earthmover_spark.util import EarthmoverSparkError
+from earthmover_spark.util import EarthmoverSparkError, let
 
 # scheme://host[:port]/path?query#fragment — permissive on purpose:
 # crawl data is full of junk URLs and a parse miss must yield NULLs,
@@ -39,18 +39,6 @@ _TWO_LEVEL_SUFFIXES = (
     "com.au", "net.au", "org.au", "com.br", "com.cn", "com.mx",
     "co.in", "co.kr", "co.za", "com.ar", "com.tr", "com.sg",
 )
-
-
-def _let(value: Column, body) -> Column:
-    """SQL 'let': evaluate ``value`` once and reference it many times.
-    ``transform`` binds the element as a named lambda variable, so
-    ``body``'s references are variable lookups instead of re-inlined
-    copies of the producing expression. Without it the domain
-    expression repeats its host/split subtrees ~16x textually; after
-    filter pushdown inlines THAT twice more, whole-stage codegen blows
-    janino's 64 KB method limit and the stage silently runs
-    interpreted (observed on the url_filter aggregation, guide §7.2)."""
-    return F.transform(F.array(value), body)[0]
 
 
 def registered_domain(host: Column) -> Column:
@@ -74,9 +62,9 @@ def registered_domain(host: Column) -> Column:
             .otherwise(last2)
         )
 
-    return _let(
+    return let(
         F.lower(host),
-        lambda h: _let(F.split(h, r"\."), lambda parts: _over_parts(h, parts)),
+        lambda h: let(F.split(h, r"\."), lambda parts: _over_parts(h, parts)),
     )
 
 
@@ -92,7 +80,7 @@ def parse_urls(
     u = F.col(url_col).cast("string")
     # let-bound so the regexp_extract appears once per output column
     # instead of twice (the ''-to-NULL probe re-inlines its operand)
-    nn = lambda c: _let(  # noqa: E731
+    nn = lambda c: let(  # noqa: E731
         c, lambda x: F.when(x == "", None).otherwise(x)
     )
     host = nn(F.regexp_extract(u, _HOST, 1))

@@ -314,10 +314,11 @@ class Executor:
         """Streaming destination: availableNow trigger drains whatever
         is new, the checkpoint remembers processed files, and the query
         stops — batch ergonomics, per-file incremental semantics.
-        Text destinations render through the same ``render_lines`` path
-        (template exprs and the Jinja pandas_udf both compose onto
-        streaming frames); columnar formats write part files."""
-        from earthmover_spark.destinations.file_destination import render_lines
+        Text destinations render through the same ``destination_lines``
+        path as batch writes (template exprs and the Jinja pandas_udf
+        both compose onto streaming frames); columnar formats write part
+        files."""
+        from earthmover_spark.destinations.file_destination import destination_lines
         from earthmover_spark.streaming import write_stream_destination
 
         short = name.split(".", 1)[1]
@@ -326,16 +327,7 @@ class Executor:
         if fmt in COLUMNAR:
             out_path = os.path.join(out_dir, f"{short}.{fmt}.d")
         else:
-            template_file = cfg.get("template")
-            template = None
-            if template_file:
-                with open(resolve_path(template_file, self.project.base_dir)) as fh:
-                    template = fh.read()
-            df = render_lines(
-                df, template, macros=self.project.macros,
-                loader_dir=self.project.base_dir,
-                linearize=cfg.get("linearize", True),
-            )
+            df = destination_lines(df, **self._render_args(cfg))
             fmt = "text"
             out_path = os.path.join(
                 out_dir, f"{short}.{cfg.get('extension', 'jsonl')}.d"

@@ -94,6 +94,31 @@ def lit_double_matrix(xss: Sequence[Sequence[float]]) -> Column:
     )
 
 
+def h60(col: Column, salt: str = "") -> Column:
+    """The engine-portable 60-bit md5-prefix hash the sketches, samplers
+    and SimHash (and their DuckDB oracles) derive from: the first 15 hex
+    chars of ``md5(salt || value)`` as a positive bigint. ONE definition
+    on purpose — the oracles reproduce these exact bits, so a drifted
+    copy would silently break sketch mergeability and every value-hash
+    twin."""
+    return F.conv(
+        F.substring(F.md5(F.concat(F.lit(salt), col.cast("string"))), 1, 15),
+        16,
+        10,
+    ).cast("bigint")
+
+
+def let(value: Column, body: Callable[[Column], Column]) -> Column:
+    """SQL 'let': evaluate ``value`` once and reference it many times.
+    ``transform`` binds the element as a named lambda variable, so
+    ``body``'s references are variable lookups instead of re-inlined
+    copies of the producing expression. Without it a nested expression
+    repeats its subtrees textually until whole-stage codegen blows
+    janino's 64 KB method limit and the stage silently runs interpreted
+    (observed on url_filter's registered-domain aggregation)."""
+    return F.transform(F.array(value), body)[0]
+
+
 class RoundTrips:
     """What ``count_round_trips`` counted: ``n`` py4j commands."""
 

@@ -261,6 +261,53 @@ def test_spread_narrow_scan_gates_on_bytes_not_file_count(spark, tmp_path):
     assert "Exchange" in p and "RoundRobinPartitioning" in p
 
 
+def test_spread_narrow_scan_passes_a_vanished_file_through(spark, tmp_path):
+    """A file deleted after the scan was planned fails its status call
+    with a Java error through py4j: the width is unknown, so the frame
+    comes back as it is."""
+    import shutil
+
+    from earthmover_spark.llm.textstats import spread_narrow_scan
+
+    if spark.sparkContext.defaultParallelism < 2:
+        pytest.skip("one core: every scan is already full width")
+    path = str(tmp_path / "docs")
+    spark.range(10).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    shutil.rmtree(path)
+    assert spread_narrow_scan(df) is df
+
+
+def test_parse_bytes_rejects_an_unknown_suffix():
+    """An unknown unit is the ``ValueError`` spread_narrow_scan catches,
+    not a ``KeyError`` that would escape it."""
+    from earthmover_spark.llm.textstats import _parse_bytes
+
+    assert _parse_bytes("128m") == 128 << 20
+    with pytest.raises(ValueError, match="unparseable size"):
+        _parse_bytes("1p")
+
+
+def test_spread_narrow_scan_raises_unexpected_errors(
+    spark, tmp_path, monkeypatch
+):
+    """Any other error in the width estimate is a bug: it must surface
+    instead of silently skipping the spread."""
+    from earthmover_spark.llm import textstats
+
+    if spark.sparkContext.defaultParallelism < 2:
+        pytest.skip("one core: every scan is already full width")
+    path = str(tmp_path / "docs")
+    spark.range(10).coalesce(1).write.parquet(path)
+
+    def broken(spark, files):
+        raise RuntimeError("broken size probe")
+
+    monkeypatch.setattr(textstats, "_total_file_bytes", broken)
+    with pytest.raises(RuntimeError, match="broken size probe"):
+        textstats.spread_narrow_scan(spark.read.parquet(path))
+
+
 def test_semantic_dedup_no_cartesian_assignment_stays_narrow(plans):
     """SemDeDup's pairwise work must stay an equi-join on the cell id —
     a cartesian product would be N^2 over the corpus; the centroid
@@ -1310,7 +1357,8 @@ def test_triplet_cosine_evaluated_once(plans):
     """_triplets_attach excludes NULL scores AFTER the rank window: a
     pre-window filter was pushed into the candidate join's condition,
     re-inlining the full cosine aggregate — every pair paid the
-    cosine twice (r14; plans/r14/triplets_before.txt)."""
+    cosine twice (round 14: the pushed filter put a second zip_with
+    in the join condition)."""
     for q in ("triplets", "hard_negs"):
         p = plans(q)
         for ln in _condition_lines(p):

@@ -298,6 +298,49 @@ def test_yaml_streaming_incremental_pipeline(spark, tmp_path):
     assert len(got2) == 3  # no reprocessing duplicates
 
 
+def test_yaml_streaming_template_includes_match_batch(spark, tmp_path):
+    """A streaming text destination renders like a batch one: its
+    template's own directory is on the ``{% include %}`` search path,
+    so ``templates/row.jsont`` can include ``templates/part.jsont``."""
+    import glob
+    import os
+    import textwrap
+
+    from earthmover_spark.plans.executor import run_project
+
+    inbox = tmp_path / "inbox"
+    spark.createDataFrame([(1, "alpha"), (2, "beta")], ["id", "word"]) \
+        .coalesce(1).write.parquet(str(inbox))
+    (tmp_path / "templates").mkdir()
+    (tmp_path / "templates" / "row.jsont").write_text(
+        '{"id": {{id}}, {% include "part.jsont" %}}'
+    )
+    (tmp_path / "templates" / "part.jsont").write_text('"word": "{{word}}"')
+    project = textwrap.dedent("""
+        sources:
+          events:
+            file: inbox
+            type: parquet
+            stream: {stream}
+        destinations:
+          events_out:
+            source: $sources.events
+            template: templates/row.jsont
+    """)
+
+    def run(stream):
+        cfg = tmp_path / f"earthmover_{stream}.yaml"
+        cfg.write_text(project.format(stream=stream))
+        out = run_project(spark, str(cfg), output_dir=str(tmp_path / f"o_{stream}"))
+        path = out["$destinations.events_out"]
+        parts = sorted(glob.glob(path + "/part-*")) if os.path.isdir(path) else [path]
+        return sorted(ln for p in parts for ln in open(p).read().splitlines())
+
+    batch = run(False)
+    assert batch == ['{"id": 1, "word": "alpha"}', '{"id": 2, "word": "beta"}']
+    assert run(True) == batch
+
+
 def test_yaml_streaming_windowed_agg_with_watermark(spark, tmp_path):
     """A watermarked windowed aggregation in YAML over a `stream: True`
     source: append mode emits only windows the final watermark has

@@ -7,9 +7,7 @@ real per-query regression at a glance.
 
 Usage:  python tools/bench_diff.py OLD.json NEW.json [--top 10]
 
-Accepts either raw bench.py output ({"queries": {...}}) or the
-driver's BENCH_r*.json wrapper ({"parsed": {...}}); a wrapper whose
-"parsed" is null (truncated tail) is rejected with a clear message.
+Both files are raw bench.py output ({"queries": {...}}).
 """
 
 from __future__ import annotations
@@ -22,15 +20,9 @@ import sys
 def _load(path: str) -> dict[str, float]:
     with open(path) as f:
         d = json.load(f)
-    if "queries" in d:
-        return d["queries"]
-    parsed = d.get("parsed")
-    if isinstance(parsed, dict) and "queries" in parsed:
-        return parsed["queries"]
-    raise SystemExit(
-        f"{path}: no per-query timings (driver wrapper with truncated "
-        "tail? re-run bench.py for a full record)"
-    )
+    if "queries" not in d:
+        raise SystemExit(f"{path}: no per-query timings (not bench.py output)")
+    return d["queries"]
 
 
 def main() -> None:
